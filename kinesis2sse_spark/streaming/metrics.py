@@ -118,3 +118,19 @@ class ProgressRecorder(StreamingQueryListener):
                 for b in self._rows
                 if query_name is None or b.query_name == query_name
             )
+
+    def totals_by_query(self) -> dict[str, dict[str, int]]:
+        """Per-query sums over the recorded batches:
+        ``{query: {"batches", "rows", "dropped_by_watermark"}}``. Spark
+        drops late rows where the reference stores disorder, so the drop
+        count sits beside the rows it did take in."""
+        totals: dict[str, dict[str, int]] = {}
+        with self._lock:
+            for b in self._rows:
+                agg = totals.setdefault(
+                    b.query_name, {"batches": 0, "rows": 0, "dropped_by_watermark": 0}
+                )
+                agg["batches"] += 1
+                agg["rows"] += b.num_input_rows
+                agg["dropped_by_watermark"] += b.dropped_by_watermark
+        return totals

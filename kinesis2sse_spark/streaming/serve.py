@@ -25,8 +25,8 @@ from __future__ import annotations
 
 import bisect
 import json
+import logging
 import threading
-from collections import deque
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,12 +36,25 @@ from kinesis2sse_spark.pipeline.since import parse_since
 
 DEFAULT_CAPACITY = 100_000  # service.go:20
 
+logger = logging.getLogger(__name__)
+
 
 class RouteLog:
     """Bounded in-memory append-only log + event-time index for one route
-    (≡ memlog.Log + Timestamp2Offset). Offsets are contiguous from 0;
-    capacity evicts the oldest entry from both log and index
-    (timestamp2offset.go:96-112)."""
+    (≡ memlog.Log + Timestamp2Offset). Offsets are increasing from 0 but
+    not contiguous: ``skip`` consumes offsets without storing entries.
+    Capacity evicts the oldest entry from both log and index
+    (timestamp2offset.go:96-112).
+
+    Entries sit in three parallel lists (offset, ts, data) from ``_head``
+    on. Eviction clears the head slots and advances ``_head``; the dead
+    prefix is deleted in one slice once it reaches ``capacity``, so
+    eviction is amortized O(1). The sorted ``(ts, offset)`` index is live
+    from ``_lo`` on: with in-order event time the evicted key is always
+    ``_keys[_lo]``, so eviction is ``_lo += 1`` and an append is a list
+    append; only out-of-order event time pays an O(n) insert or delete in
+    the index. ``read_from`` costs O(log n + result), ``nearest_offset``
+    O(log n)."""
 
     def __init__(self, capacity: int = DEFAULT_CAPACITY, max_age=None) -> None:
         if capacity <= 0:
@@ -51,8 +64,14 @@ class RouteLog:
         # the age bound the reference documents but never implemented
         # (SURVEY.md §1.4); None preserves exact reference semantics.
         self.max_age = max_age
-        self._entries: deque[tuple[int, datetime, str]] = deque()
-        self._keys: list[tuple[datetime, int]] = []  # sorted (ts, offset)
+        # retained entries are index _head.. of these three lists
+        self._offs: list[int | None] = []
+        self._ts: list[datetime | None] = []
+        self._data: list[str | None] = []
+        self._head = 0
+        # sorted (ts, offset) keys of the retained entries, live from _lo
+        self._keys: list[tuple[datetime, int] | None] = []
+        self._lo = 0
         self._next_offset = 0
         self._max_ts: datetime | None = None  # running max — O(1) age checks
         self.cond = threading.Condition()
@@ -62,27 +81,54 @@ class RouteLog:
         with self.cond:
             offset = self._next_offset
             self._next_offset += 1
-            self._entries.append((offset, ts, data))
-            bisect.insort(self._keys, (ts, offset))
+            self._offs.append(offset)
+            self._ts.append(ts)
+            self._data.append(data)
+            key = (ts, offset)
+            keys = self._keys
+            if len(keys) == self._lo or key > keys[-1]:
+                keys.append(key)
+            else:  # out-of-order event time
+                bisect.insort(keys, key, self._lo)
             if self._max_ts is None or ts > self._max_ts:
                 self._max_ts = ts
-            if len(self._entries) > self.capacity:
-                old_off, old_ts, _ = self._entries.popleft()
-                del self._keys[bisect.bisect_left(self._keys, (old_ts, old_off))]
+            if len(self._offs) - self._head > self.capacity:
+                self._evict_head()
             if self.max_age is not None:
                 horizon = self._max_ts - self.max_age
-                while self._entries and self._entries[0][1] < horizon:
-                    old_off, old_ts, _ = self._entries.popleft()
-                    del self._keys[bisect.bisect_left(self._keys, (old_ts, old_off))]
+                while self._head < len(self._offs) and self._ts[self._head] < horizon:
+                    self._evict_head()
             self.cond.notify_all()
             return offset
+
+    def _evict_head(self) -> None:
+        """Drop the oldest retained entry from the log and the index.
+        Caller holds the lock."""
+        h = self._head
+        off, ts = self._offs[h], self._ts[h]
+        self._offs[h] = self._ts[h] = self._data[h] = None
+        self._head = h + 1
+        keys, lo = self._keys, self._lo
+        if keys[lo][1] == off:
+            keys[lo] = None
+            self._lo = lo + 1
+        else:  # out-of-order event time: the key sits past the low water
+            del keys[bisect.bisect_left(keys, (ts, off), lo)]
+        cap = self.capacity
+        if self._head >= cap:
+            del self._offs[: self._head], self._ts[: self._head], self._data[: self._head]
+            self._head = 0
+        if self._lo >= cap:
+            del keys[: self._lo]
+            self._lo = 0
 
     def skip(self, n: int) -> None:
         """Advance the offset counter by ``n`` without storing entries —
         used when a micro-batch larger than capacity is trimmed before
         reaching the driver: the dropped (oldest) rows still consume
         offsets, exactly as if they had been appended and immediately
-        evicted, so ``next_offset`` parity with the reference holds."""
+        evicted, so ``next_offset`` parity with the reference holds. The
+        skipped offsets leave a gap in the retained offsets."""
         if n < 0:
             raise ValueError("skip must be non-negative")
         with self.cond:
@@ -90,14 +136,15 @@ class RouteLog:
 
     def nearest_offset(self, since: datetime):
         """Q2: offset of the smallest (ts, offset) >= (since, 0); fallback
-        largest (ts, offset) < (since, 0); None if empty."""
+        largest (ts, offset) < (since, 0); None if empty. O(log n)."""
         with self.cond:
-            if not self._keys:
+            keys, lo = self._keys, self._lo
+            if lo == len(keys):
                 return None
-            i = bisect.bisect_left(self._keys, (since, 0))
-            if i < len(self._keys):
-                return self._keys[i][1]
-            return self._keys[-1][1]
+            i = bisect.bisect_left(keys, (since, 0), lo)
+            if i < len(keys):
+                return keys[i][1]
+            return keys[-1][1]
 
     def latest_offset(self) -> int:
         """Q3: newest retained offset, floor 0 (service.go:253-258)."""
@@ -111,16 +158,11 @@ class RouteLog:
 
     def _tail_from(self, offset: int):
         """Retained entries with offset >= requested, in offset order.
-        Offsets are contiguous (eviction is left-only), so this seeks by
-        index and copies only the O(result) tail — islice avoids
-        materializing the whole deque. Caller holds the lock."""
-        import itertools
-
-        if not self._entries:
-            return []
-        first = self._entries[0][0]
-        start = max(offset - first, 0)
-        return [(o, d) for o, _, d in itertools.islice(self._entries, start, None)]
+        Offsets are increasing but may have gaps (``skip``), so the start
+        is found by bisecting the offsets from the head: O(log n) to seek,
+        then only the result is copied. Caller holds the lock."""
+        i = bisect.bisect_left(self._offs, offset, self._head)
+        return list(zip(self._offs[i:], self._data[i:]))
 
     def read_from(self, offset: int):
         """Snapshot of retained entries with offset >= requested, in offset
@@ -269,26 +311,7 @@ class SseService:
                     # extension beyond the reference's bare /health: the
                     # ProgressRecorder's per-query totals as JSON, the
                     # HTTP face of the rows-in==rows-served audit
-                    per_q: dict[str, dict] = {}
-                    with service.recorder._lock:
-                        for b in service.recorder._rows:
-                            agg = per_q.setdefault(
-                                b.query_name,
-                                {
-                                    "batches": 0,
-                                    "rows": 0,
-                                    "dropped_by_watermark": 0,
-                                },
-                            )
-                            agg["batches"] += 1
-                            agg["rows"] += b.num_input_rows
-                            # late-data visibility (r11 verdict item 6):
-                            # Spark drops late rows where the reference
-                            # stores disorder — surface the drop count
-                            agg["dropped_by_watermark"] += (
-                                b.dropped_by_watermark
-                            )
-                    body = json.dumps(per_q).encode()
+                    body = json.dumps(service.recorder.totals_by_query()).encode()
                     self.send_response(200)
                     self.send_header("Content-Type", "application/json")
                     self.send_header("Content-Length", str(len(body)))
@@ -380,10 +403,12 @@ class SseService:
 
     def stop(self) -> None:
         for q in self._queries:
+            name = None
             try:
+                name = q.name
                 q.stop()
-            except Exception:
-                pass
+            except Exception as e:  # keep stopping the rest
+                logger.warning("stopping query %s failed: %r", name, e, exc_info=True)
         if self._server is not None:
             self._server.shutdown()
             self._server.server_close()

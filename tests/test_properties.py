@@ -74,6 +74,80 @@ def test_routelog_retention_and_order(entries, capacity):
     assert offs[-1] == len(entries) - 1
 
 
+class RouteLogModel:
+    """Brute-force model of RouteLog: the retained (offset, ts, data)
+    entries in one list, evicted from the front by capacity and then by
+    age relative to the newest event time."""
+
+    def __init__(self, capacity, max_age):
+        self.capacity, self.max_age = capacity, max_age
+        self.entries: list[tuple[int, datetime, str]] = []
+        self.next = 0
+        self.max_ts = None
+
+    def append(self, ts, data):
+        self.entries.append((self.next, ts, data))
+        self.next += 1
+        self.max_ts = ts if self.max_ts is None else max(self.max_ts, ts)
+        if len(self.entries) > self.capacity:
+            self.entries.pop(0)
+        if self.max_age is not None:
+            while self.entries and self.entries[0][1] < self.max_ts - self.max_age:
+                self.entries.pop(0)
+
+    def nearest(self, since):
+        keys = [(ts, o) for o, ts, _ in self.entries]
+        ge = [k for k in keys if k >= (since, 0)]
+        if ge:
+            return min(ge)[1]
+        return max(keys)[1] if keys else None
+
+
+@given(
+    capacity=st.integers(1, 4),
+    max_age_s=st.one_of(st.none(), st.integers(0, 6)),
+    # ("append", event-time step: negative = out of order) | ("skip", n)
+    ops=st.lists(
+        st.one_of(
+            st.tuples(st.just("append"), st.integers(-4, 3)),
+            st.tuples(st.just("skip"), st.integers(0, 3)),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+)
+@settings(max_examples=150, deadline=None)
+def test_routelog_matches_list_model(capacity, max_age_s, ops):
+    """RouteLog ≡ a brute-force list model over mixed in-order and
+    out-of-order appends, skips (offset gaps) and age eviction, checked
+    after every operation; the evicted prefix of the internal lists is
+    compacted so they never exceed twice the capacity."""
+    base = datetime(2024, 1, 1)
+    max_age = None if max_age_s is None else timedelta(seconds=max_age_s)
+    log = RouteLog(capacity=capacity, max_age=max_age)
+    model = RouteLogModel(capacity, max_age)
+    t = 10
+    for kind, arg in ops:
+        if kind == "append":
+            t += arg
+            ts = base + timedelta(seconds=t)
+            data = f'{{"i":{model.next}}}'
+            assert log.append(ts, data) == model.next
+            model.append(ts, data)
+        else:
+            log.skip(arg)
+            model.next += arg
+        assert log.next_offset() == model.next
+        assert log.latest_offset() == max(model.next - 1, 0)
+        for o in range(model.next + 1):
+            assert log.read_from(o) == [(e[0], e[2]) for e in model.entries if e[0] >= o]
+        for probe in range(t - 12, t + 5):
+            since = base + timedelta(seconds=probe)
+            assert log.nearest_offset(since) == model.nearest(since)
+        for internal in (log._offs, log._ts, log._data, log._keys):
+            assert len(internal) <= 2 * capacity
+
+
 # --- Go duration parsing -------------------------------------------------
 
 

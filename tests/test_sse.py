@@ -136,6 +136,29 @@ def test_capacity_eviction():
         svc.stop()
 
 
+def test_tail_across_skip_gap_loses_no_frames():
+    """A batch larger than capacity is pushed as ``skip`` then ``capacity``
+    appends, leaving a gap in the retained offsets. A reader tailing
+    between the appends (as the HTTP handler does) must still receive
+    every appended frame, and ``read_from`` must seek past the gap by
+    offset, not by position."""
+    log = RouteLog(capacity=100)
+    for i in range(100):
+        log.append(datetime(2024, 1, 1), json.dumps({"i": i}))
+    cursor = log.next_offset()
+    log.skip(50)
+    got = []
+    for i in range(100):
+        log.append(datetime(2024, 1, 2), json.dumps({"i": 150 + i}))
+        entries = log.read_from(cursor) or log.wait_beyond(cursor, timeout=0)
+        for o, data in entries:
+            assert json.loads(data) == {"i": o}
+            got.append(o)
+            cursor = o + 1
+    assert got == list(range(150, 250))
+    assert log.read_from(151)[0][0] == 151
+
+
 def test_last_event_id_resume(service):
     """SSE reconnect extension (README.md:47, unimplemented in the
     reference): Last-Event-ID resumes delivery at the NEXT offset."""
@@ -237,6 +260,58 @@ def test_many_concurrent_clients(service):
     expected = ['{"seed":0}'] + [json.dumps({"live": k}) for k in range(n_live)]
     for i, got in enumerate(results):
         assert got == expected, f"client {i}: {got}"
+
+
+def test_recorder_totals_by_query_without_spark():
+    """/metrics serves ProgressRecorder.totals_by_query(): per-query sums
+    of batches, input rows and watermark drops over the recorded
+    progress events."""
+    from types import SimpleNamespace as NS
+
+    from kinesis2sse_spark.streaming.metrics import ProgressRecorder
+
+    def event(name, batch_id, rows, dropped):
+        ops = [NS(numRowsDroppedByWatermark=d) for d in dropped]
+        return NS(progress=NS(
+            name=name, batchId=batch_id, numInputRows=rows, inputRowsPerSecond=None,
+            processedRowsPerSecond=1.0, durationMs={"addBatch": 3}, stateOperators=ops,
+        ))
+
+    rec = ProgressRecorder()
+    assert rec.totals_by_query() == {}
+    rec.onQueryProgress(event("a", 0, 4, []))
+    rec.onQueryProgress(event("a", 1, 6, [2, 1]))
+    rec.onQueryProgress(event("b", 0, 0, [0]))
+    assert rec.totals_by_query() == {
+        "a": {"batches": 2, "rows": 10, "dropped_by_watermark": 3},
+        "b": {"batches": 1, "rows": 0, "dropped_by_watermark": 0},
+    }
+
+
+def test_stop_logs_query_failure_and_stops_the_rest(caplog):
+    """A query whose stop() raises is reported with its name and error,
+    and the remaining queries and the HTTP server still stop."""
+
+    class StubQuery:
+        def __init__(self, name, fail):
+            self.name, self.fail, self.stopped = name, fail, False
+
+        def stop(self):
+            if self.fail:
+                raise RuntimeError("stream already dead")
+            self.stopped = True
+
+    svc = SseService(routes=[RouteOptions("/")])
+    svc.start()
+    bad, good = StubQuery("sse_bad", True), StubQuery("sse_good", False)
+    svc._queries += [bad, good]
+    with caplog.at_level("WARNING", logger="kinesis2sse_spark.streaming.serve"):
+        svc.stop()
+    assert good.stopped
+    assert svc._server is None
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert "sse_bad" in rec.getMessage() and "stream already dead" in rec.getMessage()
 
 
 def test_spark_fed_route(spark):
