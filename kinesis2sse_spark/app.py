@@ -17,6 +17,7 @@ Parity map (kinesis2sse.go / service.go):
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -27,6 +28,14 @@ from pyspark.sql import functions as F
 from kinesis2sse_spark.pipeline.envelope import deaggregate_envelopes, parse_envelope
 from kinesis2sse_spark.pipeline.since import parse_go_duration, parse_rfc3339
 from kinesis2sse_spark.streaming.serve import RouteOptions, SseService
+
+logger = logging.getLogger(__name__)
+
+# Ingest rate bound for file-directory routes: files admitted per
+# micro-batch. Without it a TRIM_HORIZON start over a large directory
+# makes batch 1 the entire history; with it the backlog drains in
+# bounded increments (the KCL equivalent is its per-GetRecords limit).
+MAX_FILES_PER_TRIGGER = 64
 
 
 @dataclass
@@ -41,11 +50,6 @@ class RouteConfig:
     capacity: int = 100_000
     start: str | None = None  # LATEST | TRIM_HORIZON | RFC3339 | Go duration
     max_age: object = None  # optional timedelta — README.md:45-46 age bound
-    # Ingest rate bound: files admitted per micro-batch. Without it a
-    # TRIM_HORIZON start over a large directory makes batch 1 the entire
-    # history; with it the backlog drains in bounded increments (the KCL
-    # equivalent is its per-GetRecords limit).
-    max_files_per_trigger: int = 64
     # kinesis:// routes only: the connector's registered format name
     # (e.g. a vendor jar's, or "fake_kinesis" for the in-process test
     # connector) plus passthrough options and canonical-key respelling
@@ -124,7 +128,7 @@ class ServiceApp:
         else:
             stream = (
                 self.spark.readStream.schema("value string")
-                .option("maxFilesPerTrigger", r.max_files_per_trigger)
+                .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
                 .parquet(r.source_dir)
             )
         # KPL-aggregated records (JSON array of envelopes) de-aggregate
@@ -176,9 +180,6 @@ class ServiceApp:
                 q = self.service.attach_query(
                     r.pattern,
                     self._route_stream(r),
-                    ts_col="time",
-                    data_col="detail",
-                    query_name=f"route_{name}",
                     checkpoint_location=(
                         os.path.join(self.checkpoint_dir, name)
                         if self.checkpoint_dir
@@ -206,5 +207,5 @@ class ServiceApp:
         if rec is not None:
             try:
                 self.spark.streams.removeListener(rec)
-            except Exception:
-                pass
+            except Exception as e:
+                logger.warning("removing the progress listener failed: %r", e, exc_info=True)

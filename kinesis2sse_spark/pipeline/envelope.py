@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kinesis2sse_spark.pipeline.since import RFC3339_PATTERN
+
 
 @F.pandas_udf(T.StringType())
 def _canonical_json_udf(raw: pd.Series) -> pd.Series:
@@ -75,7 +77,29 @@ def deaggregate_envelopes(df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-RFC3339 = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
+def _envelope_columns(raw) -> tuple:
+    """The one variant parse behind both ``parse_envelope`` and
+    ``reject_reason``: ``(variant, time string, time, detail)``, where
+    ``time`` is null unless F1 and F2 hold and ``detail`` is null when F3
+    fails.
+
+    One variant parse per record replaces get_json_object×2 + a Python
+    round-trip: try_parse_json → null on invalid JSON (S4 drop), and
+    to_json(variant) emits alphabetically key-sorted compact JSON at
+    every nesting level — canonical form (P2) entirely JVM-side, inside
+    whole-stage codegen (~5x the get_json_object path at sf0.1)."""
+    v = F.try_parse_json(raw.cast("string"))
+    # variant_get stringifies non-string values ({"time": 1234} → "1234"),
+    # so F1's string-type check and F2's RFC3339 check are enforced with
+    # an explicit shape filter — Spark's loose timestamp cast would
+    # otherwise accept "1234" as year 1234 or date-only strings the Go
+    # reference rejects. try_to_timestamp: malformed time → null →
+    # dropped (F2), matching the reference's drop-and-warn rather than
+    # ANSI-mode's throw.
+    time_str = F.variant_get(v, "$.time", "string")
+    time_col = F.when(time_str.rlike(RFC3339_PATTERN), F.try_to_timestamp(time_str))
+    detail_col = F.to_json(F.variant_get(v, "$.detail", "variant"))
+    return v, time_str, time_col, detail_col
 
 
 def reject_reason(raw) -> "F.Column":
@@ -86,16 +110,11 @@ def reject_reason(raw) -> "F.Column":
     then running parse_envelope on the 'valid' slice drops nothing:
     the two are the same predicate, split by reason."""
     raw = F.col(raw) if isinstance(raw, str) else raw
-    v = F.try_parse_json(raw.cast("string"))
-    time_str = F.variant_get(v, "$.time", "string")
-    detail = F.to_json(F.variant_get(v, "$.detail", "variant"))
+    v, time_str, time_col, detail = _envelope_columns(raw)
     return (
         F.when(v.isNull(), "invalid_json")
         .when(time_str.isNull(), "missing_time")
-        .when(
-            ~time_str.rlike(RFC3339) | F.try_to_timestamp(time_str).isNull(),
-            "bad_time",
-        )
+        .when(time_col.isNull(), "bad_time")
         .when(detail.isNull(), "missing_detail")
         .otherwise("valid")
     )
@@ -121,11 +140,6 @@ def parse_envelope(
     (streaming: read ``progress.observedMetrics[name]``). Zero extra
     passes either way.
     """
-    # One variant parse per record replaces get_json_object×2 + a Python
-    # round-trip: try_parse_json → null on invalid JSON (S4 drop), and
-    # to_json(variant) emits alphabetically key-sorted compact JSON at
-    # every nesting level — canonical form (P2) entirely JVM-side, inside
-    # whole-stage codegen (~5x the get_json_object path at sf0.1).
     # Fidelity notes vs the reference (record_processor.go:78-88):
     # - {"detail": null} is KEPT and stored as the JSON text "null"
     #   (map lookup succeeds in Go, json.Marshal(nil) → "null"); only a
@@ -135,18 +149,7 @@ def parse_envelope(
     #   Python 10000000000.0 — all three dialects differ; integers,
     #   strings, bools, nulls and key order are byte-identical. Use
     #   canonical_json() (pandas UDF) where Python-exact bytes matter.
-    v = F.try_parse_json(F.col(value_col).cast("string"))
-    # variant_get stringifies non-string values ({"time": 1234} → "1234"),
-    # so F1's string-type check and F2's RFC3339 check are enforced with
-    # an explicit shape filter — Spark's loose timestamp cast would
-    # otherwise accept "1234" as year 1234 or date-only strings the Go
-    # reference rejects.
-    time_str = F.variant_get(v, "$.time", "string")
-    rfc3339 = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
-    # try_to_timestamp: malformed time → null → dropped (F2), matching
-    # the reference's drop-and-warn rather than ANSI-mode's throw.
-    time_col = F.when(time_str.rlike(rfc3339), F.try_to_timestamp(time_str))
-    detail_col = F.to_json(F.variant_get(v, "$.detail", "variant"))
+    _, _, time_col, detail_col = _envelope_columns(F.col(value_col))
     if observe is not None:
         # CollectMetrics is a pushdown barrier, so the drop below reads
         # the projected attributes instead of re-deriving them.

@@ -15,10 +15,9 @@ from datetime import datetime, timedelta, timezone
 # Go's time.RFC3339 parse is STRICT: full date, 'T', full time, and an
 # explicit offset ('Z' or ±hh:mm). Python's fromisoformat is far looser
 # (date-only, space separator, tz-naive all pass), so the shape gate
-# runs first — same pattern the envelope validator (F2) uses.
-RFC3339_RE = re.compile(
-    r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
-)
+# runs first. The envelope validator (F2) gates on the same pattern.
+RFC3339_PATTERN = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:\d{2})$"
+RFC3339_RE = re.compile(RFC3339_PATTERN)
 
 # Go duration number: integer, integer-dot, dot-fraction, or both parts
 # ("1", "1.", ".5", "1.5" — time.ParseDuration accepts all four).

@@ -209,73 +209,49 @@ class SseService:
         return self._logs[pattern.rstrip("/") or "/"]
 
     # -- Spark integration ------------------------------------------------
-    def attach_query(
-        self,
-        pattern: str,
-        stream_df,
-        ts_col: str = "time",
-        data_col: str = "detail",
-        order_col: str | list[str] | None = None,
-        query_name: str | None = None,
-        checkpoint_location: str | None = None,
-    ):
-        """Bridge a streaming DataFrame into a route log: every micro-batch
-        is sorted (per-batch total order ≡ the reference's mutex order) and
-        appended on the driver. Returns the StreamingQuery.
+    def attach_query(self, pattern: str, stream_df, checkpoint_location: str | None = None):
+        """Bridge a streaming DataFrame of ``time``/``detail`` rows (the
+        output of ``parse_envelope``) into a route log as the streaming
+        query ``route_<name>``: every micro-batch is sorted (per-batch
+        total order ≡ the reference's mutex order) and appended on the
+        driver. Returns the StreamingQuery.
 
         checkpoint_location=None matches the reference's deliberately
         non-durable checkpointing (service.go:113-116) — restart replays
         from the source's starting position; pass a path for Spark's
         durable exactly-once checkpoint (C1, strictly stronger).
 
-        Batches are ordered by (ts_col, data_col) by default — the data
-        column breaks equal-timestamp ties so offsets are deterministic
-        across runs/restarts (the reference gets a stable order for free
-        from its per-route mutex). A batch larger than the route's
-        capacity is trimmed executor-side to the newest ``capacity``
-        rows before ``collect()`` — a TRIM_HORIZON start over a year of
-        history must never materialize the year on the driver — and the
-        trimmed rows still advance the offset counter (append + instant
-        eviction ≡ skip)."""
+        Batches are ordered by (time, detail) — the detail column breaks
+        equal-timestamp ties so offsets are deterministic across
+        runs/restarts (the reference gets a stable order for free from
+        its per-route mutex). Each batch runs ONE Spark action: a top-k
+        of the newest ``capacity`` rows, so a batch larger than the
+        route's capacity is trimmed executor-side before ``collect()``
+        — a TRIM_HORIZON start over a year of history must never
+        materialize the year on the driver. An Observation on the same
+        action counts the batch (the top-k reads every row, so the count
+        is exact), and the trimmed rows still advance the offset counter
+        (append + instant eviction ≡ skip)."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         log = self.log(pattern)
-        if order_col is None:
-            order_cols = [ts_col] + ([data_col] if data_col != ts_col else [])
-        elif isinstance(order_col, str):
-            order_cols = [order_col]
-        else:
-            order_cols = list(order_col)
 
         def push(batch_df, epoch_id: int) -> None:
-            from pyspark.sql import functions as F
-
-            cap = log.capacity
-            # The batch feeds TWO actions (count, then the ordered
-            # collect); without a persist each action re-executes the
-            # batch plan from the source — measured 3x source-read
-            # amplification per micro-batch via the ProgressRecorder
-            # (parse + both actions), which at 100 TB triples the
-            # ingest scan. Cache once, release before returning.
-            batch_df.persist()
-            n_total = batch_df.count()
-            if n_total > cap:
-                # newest `cap` rows via executor-side top-k (WindowGroupLimit
-                # prunes map-side); the count pass is far cheaper than
-                # collecting an unbounded batch.
-                rows = (
-                    batch_df.orderBy(*[F.desc(c) for c in order_cols])
-                    .limit(cap)
-                    .collect()
-                )
-                rows.reverse()
-                log.skip(n_total - cap)
-            else:
-                rows = batch_df.orderBy(*order_cols).collect()
-            batch_df.unpersist()
+            seen = Observation()
+            rows = (
+                batch_df.observe(seen, F.count(F.lit(1)).alias("n"))
+                .orderBy(F.desc("time"), F.desc("detail"))
+                .limit(log.capacity)
+                .collect()
+            )
+            rows.reverse()
+            log.skip(seen.get["n"] - len(rows))
             for row in rows:
-                log.append(row[ts_col], row[data_col])
+                log.append(row["time"], row["detail"])
 
         writer = stream_df.writeStream.foreachBatch(push).queryName(
-            query_name or f"sse_{pattern.strip('/') or 'root'}"
+            f"route_{pattern.strip('/') or 'root'}"
         )
         if checkpoint_location:
             writer = writer.option("checkpointLocation", checkpoint_location)
@@ -414,8 +390,3 @@ class SseService:
             self._server.server_close()
             self._server = None
 
-
-def envelope_json_rows(rows: list[dict]) -> list[str]:
-    """Test helper: serialize event-envelope dicts to the wire format the
-    reference consumes from Kinesis ({"time": ..., "detail": ...})."""
-    return [json.dumps(r) for r in rows]

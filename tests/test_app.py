@@ -418,3 +418,19 @@ def test_metrics_endpoint_surfaces_watermark_drops(spark, tmp_path):
         assert got["route_wm"]["dropped_by_watermark"] == 0, got
     finally:
         app.stop()
+
+
+def test_stop_logs_listener_removal_failure(caplog):
+    """stop() reports a failing removeListener instead of swallowing it."""
+    from types import SimpleNamespace as NS
+
+    def remove_listener(_):
+        raise RuntimeError("listener bus gone")
+
+    app = ServiceApp(NS(streams=NS(removeListener=remove_listener)), routes=[])
+    app._recorder = object()
+    with caplog.at_level("WARNING", logger="kinesis2sse_spark.app"):
+        app.stop()
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert "listener bus gone" in rec.getMessage()

@@ -337,7 +337,7 @@ def test_spark_fed_route(spark):
     try:
         stream = spark.readStream.schema("value string").parquet(os.path.join(d, "*"))
         parsed = parse_envelope(stream)
-        q = svc.attach_query("/events", parsed, ts_col="time", data_col="detail")
+        q = svc.attach_query("/events", parsed)
         q.processAllAvailable()
         _, _, events = read_sse(svc.addr, "/events?since=1970-01-01T00:00:00.000Z", 2)
         # canonical key-sorted JSON, malformed records dropped
@@ -352,8 +352,10 @@ def test_oversized_batch_trimmed_before_driver(spark, tmp_path):
     driver already trimmed to the newest `capacity` rows — yet the
     offset counter advances as if every row had been appended and
     evicted (reference: TRIM_HORIZON over deep history, service.go
-    capacity semantics)."""
-    n, cap = 50, 5
+    capacity semantics). A later batch below capacity continues the
+    offsets from there: the observed count and the skip agree across
+    batches."""
+    n, cap, m = 50, 5, 3
     rows = [(datetime(2024, 1, 1, 0, 0, i % 60, i), json.dumps({"i": i})) for i in range(n)]
     src = str(tmp_path / "batch")
     spark.createDataFrame(rows, "time timestamp, detail string").coalesce(2).write.parquet(src)
@@ -362,14 +364,85 @@ def test_oversized_batch_trimmed_before_driver(spark, tmp_path):
     svc.start()
     try:
         stream = spark.readStream.schema("time timestamp, detail string").parquet(src)
-        q = svc.attach_query("/e", stream, ts_col="time", data_col="detail")
+        q = svc.attach_query("/e", stream)
         q.processAllAvailable()
-        q.stop()
         log = svc.log("/e")
         assert log.next_offset() == n, "trimmed rows must still consume offsets"
         entries = log.read_from(0)
         assert [o for o, _ in entries] == list(range(n - cap, n))
         assert [json.loads(d)["i"] for _, d in entries] == list(range(n - cap, n))
+
+        later = [(datetime(2024, 1, 2, 0, 0, i), json.dumps({"i": n + i})) for i in range(m)]
+        spark.createDataFrame(later, "time timestamp, detail string").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        q.processAllAvailable()
+        q.stop()
+        assert log.next_offset() == n + m
+        entries = log.read_from(0)
+        assert [o for o, _ in entries] == list(range(n + m - cap, n + m))
+        assert [json.loads(d)["i"] for _, d in entries] == list(range(n + m - cap, n + m))
+    finally:
+        svc.stop()
+
+
+def test_push_runs_at_most_two_spark_jobs_per_batch(spark, tmp_path):
+    """Each micro-batch reaches the route log through one Spark action
+    (an observed top-k), not a persist, a count and a sorted collect.
+    The jobs run under the query's job group, the query's run id."""
+    src = str(tmp_path / "files")
+    for b in range(3):
+        rows = [(datetime(2024, 1, 1, 0, b, i), json.dumps({"b": b, "i": i})) for i in range(20)]
+        spark.createDataFrame(rows, "time timestamp, detail string").coalesce(1).write.parquet(
+            f"{src}/b{b}"
+        )
+
+    svc = SseService(routes=[RouteOptions("/j", capacity=100)])
+    try:
+        stream = (
+            spark.readStream.schema("time timestamp, detail string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/*")
+        )
+        q = svc.attach_query("/j", stream)
+        q.processAllAvailable()
+        batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        q.stop()
+        assert batches == 3
+        assert svc.log("/j").next_offset() == 60
+        assert len(jobs) <= 2 * batches, f"{len(jobs)} Spark jobs for {batches} batches"
+    finally:
+        svc.stop()
+
+
+def test_all_malformed_batch_appends_nothing(spark, tmp_path):
+    """A micro-batch whose every envelope is malformed parses to zero
+    rows: the push returns (its observed count is 0, not a hang on
+    Observation.get) and the offset counter does not move."""
+    import threading
+
+    from kinesis2sse_spark.pipeline.envelope import parse_envelope
+
+    d = str(tmp_path / "malformed")
+    raw = ["bogus", '{"detail":{}}', '{"time":"yesterday","detail":1}']
+    spark.createDataFrame([(v,) for v in raw], "value string").coalesce(1).write.parquet(
+        os.path.join(d, "b0")
+    )
+
+    svc = SseService(routes=[RouteOptions("/bad")])
+    log = svc.log("/bad")
+    log.append(EPOCH, '{"seed":0}')
+    stream = spark.readStream.schema("value string").parquet(os.path.join(d, "*"))
+    q = svc.attach_query("/bad", parse_envelope(stream))
+    try:
+        t = threading.Thread(target=q.processAllAvailable, daemon=True)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), "push hung on an all-malformed batch"
+        assert q.lastProgress["numInputRows"] == len(raw)
+        assert log.next_offset() == 1
+        assert log.read_from(0) == [(0, '{"seed":0}')]
     finally:
         svc.stop()
 
@@ -387,7 +460,7 @@ def test_equal_timestamp_ties_deterministic(spark, tmp_path):
     svc.start()
     try:
         stream = spark.readStream.schema("time timestamp, detail string").parquet(src)
-        q = svc.attach_query("/t", stream, ts_col="time", data_col="detail")
+        q = svc.attach_query("/t", stream)
         q.processAllAvailable()
         q.stop()
         assert [d for _, d in svc.log("/t").read_from(0)] == [
