@@ -29,6 +29,10 @@ def build_session(
     - Arrow on: every Pandas-UDF boundary is vectorized.
     - Session timezone UTC: parquet timestamps compare bit-for-bit with
       the DuckDB oracle.
+    - Streaming checkpoint files (offset, commit and file-source logs,
+      state stores) are written through Hadoop's ``FileSystem``, not
+      ``FileContext``, which forks processes on every write to a
+      ``file:`` path when native libhadoop is absent.
     """
     # Python workers don't inherit the driver's sys.path — a UDF closure
     # that references any module-level helper (e.g. the canonical-JSON
@@ -62,6 +66,17 @@ def build_session(
         # events.parquet stores TIMESTAMP(NANOS); Spark has no ns type, so
         # read as long and convert to µs in the catalog loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Without native libhadoop, FileContext on file: paths forks a
+        # `chmod` per create and two `readlink`s per rename, three files
+        # a micro-batch (offsets/N, commits/N, sources/0/N). The
+        # FileSystem manager renames with File.renameTo after the same
+        # destination check, and is Spark's own pick for any filesystem
+        # without an AbstractFileSystem; on HDFS its rename is atomic too.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -26,6 +26,7 @@ PROGRESS_SCHEMA = (
     "input_rows_per_second double, process_rows_per_second double, "
     "trigger_ms long, add_batch_ms long, dropped_by_watermark long"
 )
+OBSERVED_COUNTS = ("n_records", "n_dropped")
 
 
 @dataclass
@@ -38,6 +39,9 @@ class _Batch:
     trigger_ms: int
     add_batch_ms: int
     dropped_by_watermark: int
+    # OBSERVED_COUNTS summed over the batch's observations; empty when
+    # the query observes neither
+    parse_counts: dict[str, int]
 
 
 class ProgressRecorder(StreamingQueryListener):
@@ -70,6 +74,13 @@ class ProgressRecorder(StreamingQueryListener):
             int(getattr(op, "numRowsDroppedByWatermark", 0) or 0)
             for op in (p.stateOperators or [])
         )
+        # parse_envelope(observe=...) counts envelopes parsed and dropped
+        # as malformed on the same scan; nothing else reports those drops
+        parse_counts: dict[str, int] = {}
+        for obs in (p.observedMetrics or {}).values():
+            for k, v in obs.asDict().items():
+                if k in OBSERVED_COUNTS:
+                    parse_counts[k] = parse_counts.get(k, 0) + int(v)
         row = _Batch(
             query_name=p.name or "",
             batch_id=int(p.batchId),
@@ -79,6 +90,7 @@ class ProgressRecorder(StreamingQueryListener):
             trigger_ms=int(dur.get("triggerExecution", 0)),
             add_batch_ms=int(dur.get("addBatch", 0)),
             dropped_by_watermark=dropped,
+            parse_counts=parse_counts,
         )
         with self._lock:
             self._rows.append(row)
@@ -123,7 +135,10 @@ class ProgressRecorder(StreamingQueryListener):
         """Per-query sums over the recorded batches:
         ``{query: {"batches", "rows", "dropped_by_watermark"}}``. Spark
         drops late rows where the reference stores disorder, so the drop
-        count sits beside the rows it did take in."""
+        count sits beside the rows it did take in. A query that observes
+        ``n_records`` / ``n_dropped`` (a route's envelope parse) also
+        carries their sums: envelopes parsed and malformed ones dropped,
+        so a route's ``next_offset + n_dropped == n_records``."""
         totals: dict[str, dict[str, int]] = {}
         with self._lock:
             for b in self._rows:
@@ -133,4 +148,6 @@ class ProgressRecorder(StreamingQueryListener):
                 agg["batches"] += 1
                 agg["rows"] += b.num_input_rows
                 agg["dropped_by_watermark"] += b.dropped_by_watermark
+                for k, v in b.parse_counts.items():
+                    agg[k] = agg.get(k, 0) + v
         return totals

@@ -38,6 +38,22 @@ def _write_envelopes(spark, d: str, name: str, envelopes: list[dict]):
     ).parquet(os.path.join(d, name))
 
 
+def _metrics(app, ready) -> dict:
+    """GET /metrics until ``ready(body)`` holds (listener delivery is
+    async) or ten seconds pass; returns the last body."""
+    import time
+    import urllib.request
+
+    got = {}
+    for _ in range(50):
+        with urllib.request.urlopen(f"{app.addr}/metrics", timeout=5) as r:
+            got = json.loads(r.read())
+        if ready(got):
+            break
+        time.sleep(0.2)
+    return got
+
+
 def test_two_route_app(spark):
     foo_dir = staged_batch_dir("app_foo")
     bar_dir = staged_batch_dir("app_bar")
@@ -234,6 +250,79 @@ def test_durable_checkpoint_resumes_not_replays(spark, tmp_path):
         app2.stop()
 
 
+def test_checkpoint_logs_write_through_filesystem_manager(spark):
+    """build_session points every streaming checkpoint log at Hadoop's
+    FileSystem API. Spark's default goes through FileContext, which
+    without native libhadoop forks `chmod` and `readlink` processes on
+    each checkpoint write to a file: path."""
+    d = staged_batch_dir("app_ckpt_manager")
+    _write_envelopes(spark, d, "b0", [{"time": "2024-01-01T00:00:00Z", "detail": {"n": 1}}])
+    app = ServiceApp(
+        spark, routes=[RouteConfig("/fm", os.path.join(d, "*"), start="TRIM_HORIZON")]
+    )
+    app.start()
+    try:
+        (q,) = app.service._queries
+        execution = q._jsq.streamingQuery()
+        for log in (execution.offsetLog(), execution.commitLog()):
+            manager = log.fileManager().getClass().getSimpleName()
+            assert manager == "FileSystemBasedCheckpointFileManager"
+    finally:
+        app.stop()
+
+
+def test_uncommitted_batch_reruns_once_from_logged_offsets(spark, tmp_path):
+    """A crash after the offset-log write and before the commit: with
+    commits/<N> gone, a restarted route re-runs batch N exactly once
+    from its logged offsets (its rows arrive, the earlier batch's do
+    not) and leaves offsets/<N> as written."""
+    d = staged_batch_dir("app_ckpt_wal")
+    ckpt = str(tmp_path / "ckpt")
+    route = RouteConfig("/wal", os.path.join(d, "*"), start="TRIM_HORIZON")
+    _write_envelopes(spark, d, "b0", [{"time": "2024-01-01T00:00:00Z", "detail": {"n": 1}}])
+    app = ServiceApp(spark, routes=[route], checkpoint_dir=ckpt)
+    app.start()
+    try:
+        app.process_all_available()
+        _write_envelopes(
+            spark, d, "b1",
+            [
+                {"time": "2024-01-02T00:00:00Z", "detail": {"n": 2}},
+                {"time": "2024-01-02T00:00:01Z", "detail": {"n": 3}},
+            ],
+        )
+        app.process_all_available()
+        assert len(app.service.log("/wal").read_from(0)) == 3
+    finally:
+        app.stop()
+
+    logs = os.path.join(ckpt, "wal")
+    batch = max(int(f) for f in os.listdir(os.path.join(logs, "offsets")) if f.isdigit())
+    assert batch == 1
+    offsets = os.path.join(logs, "offsets", str(batch))
+    with open(offsets, "rb") as f:
+        logged = f.read()
+    logged_mtime = os.stat(offsets).st_mtime_ns
+    for name in (str(batch), f".{batch}.crc"):
+        path = os.path.join(logs, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+
+    app2 = ServiceApp(spark, routes=[route], checkpoint_dir=ckpt)
+    app2.start()
+    try:
+        app2.process_all_available()
+        entries = app2.service.log("/wal").read_from(0)
+        assert [data for _, data in entries] == ['{"n":2}', '{"n":3}']
+    finally:
+        app2.stop()
+    with open(offsets, "rb") as f:
+        assert f.read() == logged
+    assert os.stat(offsets).st_mtime_ns == logged_mtime
+    assert os.path.exists(os.path.join(logs, "commits", str(batch)))
+    assert not os.path.exists(os.path.join(logs, "offsets", str(batch + 1)))
+
+
 def test_kpl_aggregated_route(spark):
     """A route fed a KPL-style aggregated record (one stream record =
     JSON array of envelopes) serves the individual user records in
@@ -313,10 +402,6 @@ def test_kinesis_route_end_to_end(spark, tmp_path):
 def test_metrics_endpoint_reports_route_rows(spark, tmp_path):
     """/metrics (extension beyond the reference's bare /health) reports
     per-route-query batch and row totals from the ProgressRecorder."""
-    import json as _json
-    import time
-    import urllib.request
-
     src = staged_batch_dir("app_metrics")
     _write_envelopes(
         spark,
@@ -334,15 +419,44 @@ def test_metrics_endpoint_reports_route_rows(spark, tmp_path):
     app.start()
     try:
         app.process_all_available()
-        got = {}
-        for _ in range(50):
-            with urllib.request.urlopen(f"{app.addr}/metrics", timeout=5) as r:
-                got = _json.loads(r.read())
-            if got.get("route_m", {}).get("rows", 0) >= 4:
-                break
-            time.sleep(0.2)
+        got = _metrics(app, lambda m: m.get("route_m", {}).get("rows", 0) >= 4)
         assert got["route_m"]["rows"] == 4
         assert got["route_m"]["batches"] >= 1
+    finally:
+        app.stop()
+
+
+def test_metrics_endpoint_reconciles_malformed_envelopes(spark):
+    """/metrics carries the route parse's observed counts: every raw
+    record is an envelope parsed (n_records), and the malformed ones are
+    dropped (n_dropped), so next_offset + n_dropped == n_records while
+    rows still counts the source's input rows."""
+    src = staged_batch_dir("app_metrics_malformed")
+    valid = [
+        json.dumps({"time": f"2024-01-01T00:00:0{i}Z", "detail": {"i": i}}) for i in range(3)
+    ]
+    malformed = [
+        "not json",
+        json.dumps({"time": "yesterday", "detail": {"i": -1}}),
+        json.dumps({"detail": {"i": -2}}),
+        json.dumps({"time": "2024-01-01T00:00:09Z"}),
+    ]
+    spark.createDataFrame([(v,) for v in valid + malformed], "value string").coalesce(
+        1
+    ).write.parquet(os.path.join(src, "b0"))
+    app = ServiceApp(
+        spark,
+        routes=[RouteConfig("/mal", os.path.join(src, "*"), start="TRIM_HORIZON")],
+    )
+    app.start()
+    try:
+        app.process_all_available()
+        got = _metrics(app, lambda m: m.get("route_mal", {}).get("n_records", 0) >= 7)
+        route = got["route_mal"]
+        assert route["rows"] == route["n_records"] == 7, got
+        assert route["n_dropped"] == 4, got
+        next_offset = app.service.log("/mal").next_offset()
+        assert next_offset + route["n_dropped"] == route["n_records"]
     finally:
         app.stop()
 
@@ -355,9 +469,7 @@ def test_metrics_endpoint_surfaces_watermark_drops(spark, tmp_path):
     late arrival (batch 2 carries an event far older than the watermark
     batch 1 established) increments dropped_by_watermark for the
     stateful query, visible over HTTP."""
-    import json as _json
     import time
-    import urllib.request
 
     from pyspark.sql import functions as F
 
@@ -406,13 +518,9 @@ def test_metrics_endpoint_surfaces_watermark_drops(spark, tmp_path):
         finally:
             q.stop()
             q.awaitTermination()
-        got = {}
-        for _ in range(50):  # listener delivery is async
-            with urllib.request.urlopen(f"{app.addr}/metrics", timeout=5) as r:
-                got = _json.loads(r.read())
-            if got.get("wm_drop_probe", {}).get("dropped_by_watermark", 0) >= 1:
-                break
-            time.sleep(0.2)
+        got = _metrics(
+            app, lambda m: m.get("wm_drop_probe", {}).get("dropped_by_watermark", 0) >= 1
+        )
         assert got["wm_drop_probe"]["dropped_by_watermark"] >= 1, got
         # route queries are stateless: present with a zero drop count
         assert got["route_wm"]["dropped_by_watermark"] == 0, got

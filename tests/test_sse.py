@@ -265,26 +265,35 @@ def test_many_concurrent_clients(service):
 def test_recorder_totals_by_query_without_spark():
     """/metrics serves ProgressRecorder.totals_by_query(): per-query sums
     of batches, input rows and watermark drops over the recorded
-    progress events."""
+    progress events, plus observed n_records / n_dropped summed over
+    batches and observations for a query that observes them."""
     from types import SimpleNamespace as NS
+
+    from pyspark.sql import Row
 
     from kinesis2sse_spark.streaming.metrics import ProgressRecorder
 
-    def event(name, batch_id, rows, dropped):
+    def event(name, batch_id, rows, dropped, observed=None):
         ops = [NS(numRowsDroppedByWatermark=d) for d in dropped]
         return NS(progress=NS(
             name=name, batchId=batch_id, numInputRows=rows, inputRowsPerSecond=None,
             processedRowsPerSecond=1.0, durationMs={"addBatch": 3}, stateOperators=ops,
+            observedMetrics=observed or {},
         ))
 
     rec = ProgressRecorder()
     assert rec.totals_by_query() == {}
     rec.onQueryProgress(event("a", 0, 4, []))
-    rec.onQueryProgress(event("a", 1, 6, [2, 1]))
+    rec.onQueryProgress(event("a", 1, 6, [2, 1], {"probe": Row(max_ts=7)}))
     rec.onQueryProgress(event("b", 0, 0, [0]))
+    rec.onQueryProgress(event("r", 0, 5, [], {"ingest_r": Row(n_records=5, n_dropped=2)}))
+    rec.onQueryProgress(event("r", 1, 3, [], {
+        "ingest_r": Row(n_records=3, n_dropped=0), "other": Row(n_records=1, n_dropped=1),
+    }))
     assert rec.totals_by_query() == {
         "a": {"batches": 2, "rows": 10, "dropped_by_watermark": 3},
         "b": {"batches": 1, "rows": 0, "dropped_by_watermark": 0},
+        "r": {"batches": 2, "rows": 8, "dropped_by_watermark": 0, "n_records": 9, "n_dropped": 3},
     }
 
 
