@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from kinesis2sse_spark.pipeline.envelope import deaggregate_envelopes, parse_envelope
 from kinesis2sse_spark.pipeline.since import parse_go_duration, parse_rfc3339
-from kinesis2sse_spark.streaming.serve import RouteOptions, SseService
+from kinesis2sse_spark.streaming.serve import DEFAULT_CAPACITY, RouteOptions, SseService
 
 logger = logging.getLogger(__name__)
 
@@ -47,7 +47,7 @@ class RouteConfig:
     # flag (kinesis2sse.go:41-57) generalized to the disableKCL seam's
     # source kinds (streaming/source.py).
     source_dir: str
-    capacity: int = 100_000
+    capacity: int = DEFAULT_CAPACITY
     start: str | None = None  # LATEST | TRIM_HORIZON | RFC3339 | Go duration
     max_age: object = None  # optional timedelta — README.md:45-46 age bound
     # kinesis:// routes only: the connector's registered format name

@@ -8,6 +8,9 @@ Loading stays lazy; Catalyst pushes filters/projections into the scan.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,14 +58,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def fixture_fingerprint(sf_dir: str, table: str) -> str:
     """12-hex CONTENT fingerprint of ``<sf_dir>/<table>.parquet`` —
-    absolute path + sorted part list + mtimes (the _stage_links scheme,
-    streaming/source.py): a regenerated fixture (Spark overwrite writes
-    new part filenames/mtimes) or a different tree sharing a basename
-    yields a different fingerprint. Used to key build-if-absent
-    artifact caches (_ensure_graph_edges, _ensure_ivf_index) so a
-    rebuilt corpus can never be served a stale artifact (r12 verdict
-    item 1 — the same staleness class the r11 advice caught in the
-    streaming staging dir)."""
+    absolute path + sorted part list + mtimes: a regenerated fixture
+    (Spark overwrite writes new part filenames/mtimes) or a different
+    tree sharing a basename yields a different fingerprint. Keys every
+    build-if-absent scratch cache (scratch_cache) so a rebuilt corpus
+    is never served a stale artifact."""
     import hashlib
 
     src = os.path.join(sf_dir, f"{table}.parquet")
@@ -76,6 +76,55 @@ def fixture_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.md5(
         f"{os.path.abspath(src)}|{payload}".encode()
     ).hexdigest()[:12]
+
+
+# Every scratch directory the package writes (staged streams, round-trip
+# sinks, archive lakes, prebuilt artifacts) lives under the system temp
+# directory — tempfile.gettempdir(), which honours TMPDIR — so a run can
+# be confined to its own work directory without any further setting.
+
+
+def _sf_base(sf_dir: str) -> str:
+    return os.path.basename(os.path.normpath(sf_dir)) or "sf"
+
+
+def scratch_cache(
+    kind: str, sf_dir: str, table: str, build: Callable[[str], None] | None = None
+) -> str:
+    """Content-keyed scratch directory
+    ``<tmp>/k2s_<kind>/<basename(sf_dir)>-<fixture_fingerprint>`` for an
+    artifact derived from ``<sf_dir>/<table>.parquet``; new fixture
+    content → new path → rebuild. With ``build``, an absent directory
+    is built by ``build(d)`` into a sibling and renamed into place, so
+    a half-built one is never served. Without it, the caller's writer
+    creates the path and owns its completion marker (Spark's
+    _SUCCESS)."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"k2s_{kind}",
+        f"{_sf_base(sf_dir)}-{fixture_fingerprint(sf_dir, table)}",
+    )
+    if build is not None and not os.path.isdir(path):
+        part = f"{path}.part{os.getpid()}"
+        shutil.rmtree(part, ignore_errors=True)
+        os.makedirs(part)
+        build(part)
+        try:
+            os.rename(part, path)
+        except OSError:  # a concurrent caller renamed its copy first
+            shutil.rmtree(part, ignore_errors=True)
+    return path
+
+
+def scratch_fresh(kind: str, sf_dir: str | None = None) -> str:
+    """Empty scratch directory ``<tmp>/k2s_<kind>`` (suffixed
+    ``_<basename(sf_dir)>`` when given), emptied on every call so
+    nothing a previous run left there can be read back."""
+    name = f"k2s_{kind}_{_sf_base(sf_dir)}" if sf_dir else f"k2s_{kind}"
+    path = os.path.join(tempfile.gettempdir(), name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def spread(df: DataFrame, spark: SparkSession) -> DataFrame:

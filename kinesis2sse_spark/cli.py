@@ -34,6 +34,7 @@ import sys
 import uuid
 
 from kinesis2sse_spark.app import RouteConfig, ServiceApp
+from kinesis2sse_spark.streaming.serve import DEFAULT_CAPACITY
 
 
 def parse_routes(unparsed: str, region: str) -> list[RouteConfig]:
@@ -67,7 +68,7 @@ def parse_routes(unparsed: str, region: str) -> list[RouteConfig]:
             RouteConfig(
                 pattern=path if path.startswith("/") else "/" + path,
                 source_dir=source,
-                capacity=int(r.get("capacity") or 100_000),
+                capacity=int(r.get("capacity") or DEFAULT_CAPACITY),
                 start=r.get("start") or None,
             )
         )

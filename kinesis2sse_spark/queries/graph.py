@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis2sse_spark.catalog import load_table, pin_cache
+from kinesis2sse_spark.catalog import load_table, pin_cache, scratch_cache
 from kinesis2sse_spark.queries.llm_dedup import _ORACLE_CLUSTER_CTE, JACCARD_THRESHOLD
 from kinesis2sse_spark.registry import register
 
@@ -1540,35 +1540,18 @@ def _assortativity(pairs: DataFrame) -> DataFrame:
 _GRAPH_EDGES_SCHEMA = "src long, dst long"
 
 
-def _graph_edges_path(sf_dir: str) -> str:
-    """Deterministic lake location for the prebuilt near-dup edge
-    relation, keyed by the fixture's CONTENT fingerprint (abs path +
-    sorted part list + mtimes, catalog.fixture_fingerprint) — a
-    regenerated documents corpus, or two trees sharing a basename, get
-    distinct artifact paths and therefore a fresh build (r12 verdict
-    item 1). The basename stays in the path for human debuggability
-    only."""
-    import os
-
-    from kinesis2sse_spark.catalog import fixture_fingerprint
-
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    fp = fixture_fingerprint(sf_dir, "documents")
-    return f"/tmp/k2s_graph_edges/{base}-{fp}"
-
-
 def _ensure_graph_edges(
     spark: SparkSession, sf_dir: str, rebuild: bool = False
 ) -> str:
     """Materialize the distinct (src, dst) near-dup edge relation as
-    parquet if absent. The artifact path embeds the source corpus's
-    content fingerprint (_graph_edges_path), so build-if-absent is
+    parquet if absent. The artifact path embeds the documents corpus's
+    content fingerprint (catalog.scratch_cache), so build-if-absent is
     safe against in-place fixture regeneration: new content → new
     path → rebuild. Same non-laziness contract as _ensure_ivf_index:
     the write runs eagerly at call time."""
     import os
 
-    path = _graph_edges_path(sf_dir)
+    path = scratch_cache("graph_edges", sf_dir, "documents")
     if rebuild or not os.path.exists(os.path.join(path, "_SUCCESS")):
         from kinesis2sse_spark.queries.llm_dedup import dedup_ngram_jaccard
 

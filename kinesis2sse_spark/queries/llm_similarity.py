@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis2sse_spark.catalog import load_table, pin_cache
+from kinesis2sse_spark.catalog import load_table, pin_cache, scratch_cache
 from kinesis2sse_spark.registry import register
 
 N_QUERIES = 10  # query set = vec_id < 10
@@ -557,22 +557,6 @@ _IVF_ASSIGNED_SCHEMA = (
 _IVF_CENTROIDS_SCHEMA = "cell int, cv array<double>, cnorm double"
 
 
-def _ivf_index_path(sf_dir: str) -> str:
-    """Deterministic lake location for the prebuilt IVF index, keyed by
-    the embeddings fixture's CONTENT fingerprint (abs path + sorted
-    part list + mtimes, catalog.fixture_fingerprint): a regenerated
-    corpus, or two trees sharing a basename, get distinct paths and so
-    a fresh build (r12 verdict item 1). Basename kept for
-    debuggability."""
-    import os
-
-    from kinesis2sse_spark.catalog import fixture_fingerprint
-
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    fp = fixture_fingerprint(sf_dir, "embeddings")
-    return f"/tmp/k2s_ivf_index/{base}-{fp}"
-
-
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str, rebuild: bool = False):
     """Materialize the IVF index as a lake artifact if absent: the cell
     assignment (vec_id, v, norm) written PARTITIONED BY cell — the
@@ -581,11 +565,11 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str, rebuild: bool = False):
     (same non-laziness contract as pin_cache: callers are index
     lifecycle operators, not lazy query builders). The artifact path
     embeds the embeddings fixture's content fingerprint
-    (_ivf_index_path), so build-if-absent is safe against in-place
+    (catalog.scratch_cache), so build-if-absent is safe against in-place
     corpus regeneration: new content → new path → rebuild."""
     import os
 
-    path = _ivf_index_path(sf_dir)
+    path = scratch_cache("ivf_index", sf_dir, "embeddings")
     apath, cpath = f"{path}/assigned", f"{path}/centroids"
     done = all(
         os.path.exists(os.path.join(p, "_SUCCESS")) for p in (apath, cpath)
@@ -698,7 +682,9 @@ def sim_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     attests this round's write path."""
     import os
 
-    path = os.path.join(_ivf_index_path(sf_dir) + "_incr", "assigned")
+    path = os.path.join(
+        scratch_cache("ivf_index", sf_dir, "embeddings") + "_incr", "assigned"
+    )
     corpus = _with_norm(load_table(spark, sf_dir, "embeddings"))
     base = corpus.filter(F.col("vec_id") < IVF_APPEND_SPLIT)
     centroids = _ivf_centroids(base)

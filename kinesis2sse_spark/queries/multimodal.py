@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis2sse_spark.catalog import load_table, pin_cache
+from kinesis2sse_spark.catalog import load_table, pin_cache, scratch_fresh
 from kinesis2sse_spark.registry import register
 
 FRAME_BYTES = 16  # bytes per fake "frame"
@@ -97,8 +97,7 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 10)
-    stage = f"/tmp/k2s_binfiles_{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(stage, exist_ok=True)
+    stage = scratch_fresh("binfiles", sf_dir)
     rows = d.select("doc_id", "text").collect()
     # Driver-side staging is ONLY safe because the filter above bounds the
     # fixture set; fail loudly if a future edit widens it into a funnel.

@@ -1,18 +1,17 @@
 """Source/sink coverage beyond parquet: CSV, JSON, and ORC round-trips
-(write the fixture out in the target format under /tmp, read it back,
-aggregate) — verifying both the reader and the writer against an oracle
-that only ever sees the original parquet. Plus the canonical-JSON (P2)
-projection checked against the oracle's text-level normalization.
+(write the fixture out in the target format to a scratch directory
+under the system temp directory, read it back, aggregate) — verifying
+both the reader and the writer against an oracle that only ever sees
+the original parquet. Plus the canonical-JSON (P2) projection checked
+against the oracle's text-level normalization.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis2sse_spark.catalog import load_table
+from kinesis2sse_spark.catalog import load_table, scratch_fresh
 from kinesis2sse_spark.registry import register
 
 _ORACLE_ORDERS_AGG = """
@@ -23,7 +22,7 @@ _ORACLE_ORDERS_AGG = """
 
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str, **write_opts) -> DataFrame:
     src = load_table(spark, sf_dir, "orders")
-    path = f"/tmp/k2s_rt_{fmt}_{os.path.basename(sf_dir.rstrip('/'))}"
+    path = scratch_fresh(f"rt_{fmt}", sf_dir)
     writer = src.write.mode("overwrite").format(fmt)
     for k, v in write_opts.items():
         writer = writer.option(k, v)
@@ -62,7 +61,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned parquet sink (partitionBy month) read back with
     partition pruning available — the layout a 100 TB table actually uses."""
     src = load_table(spark, sf_dir, "orders")
-    path = f"/tmp/k2s_rt_part_{os.path.basename(sf_dir.rstrip('/'))}"
+    path = scratch_fresh("rt_part", sf_dir)
     out = src.withColumn("month", F.date_format("o_orderdate", "yyyy-MM"))
     out.write.mode("overwrite").partitionBy("month").parquet(path)
     # read back with the WRITTEN schema: a zero-row input (empty

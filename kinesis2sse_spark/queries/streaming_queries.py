@@ -14,6 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis2sse_spark.catalog import scratch_cache, scratch_fresh
 from kinesis2sse_spark.registry import register
 from kinesis2sse_spark.streaming.source import events_stream, run_to_memory
 
@@ -392,17 +393,13 @@ def streaming_archive_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     record the reference lacks (memlog evicts at capacity); at 100 TB
     this lake, not the stream, is what every batch query scans — so the
     read-back stays lazy (no driver materialization); the lake is
-    staged fresh per call at a content-keyed path. Restart/no-replay
+    staged in a scratch directory emptied per call. Restart/no-replay
     semantics are pytest-covered
     (test_archive_sink_exactly_once_across_restart)."""
-    import os
-    import shutil
-
     from kinesis2sse_spark.streaming.archive import archive_stream
 
     s = events_stream(spark, sf_dir).select("event_id", "event_type", "ts", "value")
-    root = f"/tmp/k2s_archive_{os.path.basename(sf_dir.rstrip('/'))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_fresh("archive", sf_dir)
     q = archive_stream(
         s, f"{root}/lake", f"{root}/ckpt", query_name=_qname("archive")
     )
@@ -433,15 +430,11 @@ def pipeline_lake_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     must still read back as the identity. File-count reduction and
     untouched-partition preservation are pytest-covered
     (test_compact_lake_reduces_files_preserves_rows)."""
-    import os
-    import shutil
-
     from kinesis2sse_spark.maintenance import compact_lake
     from kinesis2sse_spark.streaming.archive import archive_stream
 
     s = events_stream(spark, sf_dir).select("event_id", "event_type", "ts", "value")
-    root = f"/tmp/k2s_compact_{os.path.basename(sf_dir.rstrip('/'))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_fresh("compact", sf_dir)
     q = archive_stream(
         s, f"{root}/lake", f"{root}/ckpt", query_name=_qname("compact_src")
     )
@@ -1218,12 +1211,13 @@ def streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVF_APPEND_SPLIT,
         _ivf_assign,
         _ivf_centroids,
-        _ivf_index_path,
         _ivf_occupancy_split,
         _with_norm,
     )
 
-    path = os.path.join(_ivf_index_path(sf_dir) + "_stream", "assigned")
+    path = os.path.join(
+        scratch_cache("ivf_index", sf_dir, "embeddings") + "_stream", "assigned"
+    )
     shutil.rmtree(os.path.dirname(path), ignore_errors=True)
     from kinesis2sse_spark.catalog import load_table
 

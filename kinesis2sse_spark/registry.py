@@ -63,36 +63,8 @@ def register(name: str, oracle: str | None = None, bench: bool = False):
 # The correctness driver checks the FIRST 50 entries of queries() in
 # iteration order. Registration order is import order (alphabetical by
 # module), so without intervention the same 50 get re-checked every
-# round and the rest never earn a driver row. This list is RE-CURATED
-# each round to the highest-signal re-proofs (prior compositions live
-# in git history); _ordered() layers it between the automatic red
-# re-front rule and never-checked-first rotation.
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round-13 window (prior compositions live in git history).
-    # Changed-output / changed-plan operators that must re-earn a
-    # driver row this round; the rest of the 50-row budget fills
-    # automatically with never-checked r13 additions first, then the
-    # oldest-vintage (r05/r06) LRC front (r12 verdict item 2).
-    # - exact union candidate count (schema changed: cand_union,
-    #   cand_both replace cand_union_upper):
-    "er_blocking_union_recall",
-    # - sign-safe lattice quantization (same output on non-negative
-    #   fixtures, changed expression tree):
-    "privacy_dp_mean",
-    # - artifact path now content-fingerprinted (same outputs; re-prove
-    #   one probe per artifact family through the new path scheme):
-    "er_blocking_quality",
-    "graph_hits_prebuilt",
-    "dedup_cc_prebuilt",
-    "sim_topk_ivf_prebuilt",
-)
-
-# The round this DRIVER_PRIORITY composition was curated for. The list
-# is spent only once every listed name has a CORRECTNESS row from this
-# round or later — so re-proof entries (which already hold OLD rows)
-# keep fronting until the round actually runs, fixing the r06 failure
-# mode where a re-proof list spent itself instantly against stale rows.
-DRIVER_PRIORITY_ROUND = 13
+# round and the rest never earn a driver row; _ordered() rotates the
+# window from the recorded driver rows instead.
 
 
 def _driver_rows() -> dict[str, tuple[int, dict]]:
@@ -146,42 +118,26 @@ def _red_names() -> list[str]:
 
 
 def _ordered() -> list[str]:
-    """Driver window ordering, SELF-ROTATING, three rules in priority
-    order:
+    """Driver window ordering, SELF-ROTATING:
 
     1. RED RE-FRONT: any query whose LATEST driver row is red leads the
-       window unconditionally (registration order among reds). A red
-       row is the one signal that must never wait on a curated list.
-    2. ACTIVE PRIORITY LIST: DRIVER_PRIORITY leads (in manual order,
-       exempt from rotate-to-back) until every listed name has a row
-       from round >= DRIVER_PRIORITY_ROUND — rows from EARLIER rounds
-       don't spend it, so re-proof entries with old green rows still
-       front in the round the list was curated for. Once spent, a
-       stale manual list never pins the window while a never-checked
-       backlog waits.
-    3. Behind those: never-checked first (registration order), then
+       window unconditionally (registration order among reds), so a
+       regression never rotates out of driver scrutiny while unfixed.
+    2. Behind those: never-checked first (registration order), then
        already-checked ordered LEAST-RECENTLY-CHECKED first (latest row
        round ascending, registration order within a round) — so once
        coverage is airtight the window cycles through the whole
        registry across rounds instead of re-checking the same
        registration-order prefix forever."""
     rows = _driver_rows()
-    checked = set(rows)
     reds = _red_names()
-    pri = [n for n in DRIVER_PRIORITY if n in _REGISTRY]
-    spent = all(
-        n in rows and rows[n][0] >= DRIVER_PRIORITY_ROUND for n in pri
-    )
-    lead = list(reds) + [
-        n for n in ([] if spent else pri) if n not in set(reds)
-    ]
-    seen = set(lead)
+    seen = set(reds)
     rest = [n for n in _REGISTRY if n not in seen]
     return (
-        lead
-        + [n for n in rest if n not in checked]
+        reds
+        + [n for n in rest if n not in rows]
         + sorted(
-            (n for n in rest if n in checked),
+            (n for n in rest if n in rows),
             key=lambda n: rows[n][0],  # stable: reg. order within a round
         )
     )

@@ -195,10 +195,10 @@ class SseService:
 
     routes: list[RouteOptions]
     port: int = 0  # 0 → ephemeral (reference: -1 → random, service.go:67-72)
-    _logs: dict[str, RouteLog] = field(default_factory=dict)
-    _server: ThreadingHTTPServer | None = None
-    _thread: threading.Thread | None = None
-    _queries: list = field(default_factory=list)
+    _logs: dict[str, RouteLog] = field(init=False, default_factory=dict)
+    _server: ThreadingHTTPServer | None = field(init=False, default=None)
+    _thread: threading.Thread | None = field(init=False, default=None)
+    _queries: list = field(init=False, default_factory=list)
     recorder: object | None = None  # ProgressRecorder (streaming/metrics.py)
 
     def __post_init__(self) -> None:

@@ -11,13 +11,13 @@ provided (SURVEY.md §7 M4). Kafka would slot in the same way.
 from __future__ import annotations
 
 import functools
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kinesis2sse_spark.catalog import scratch_cache, scratch_fresh
 
 
 def _events_schema(ts_is_nanos: bool) -> T.StructType:
@@ -51,45 +51,25 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 
 def _stage_links(sf_dir: str, table: str) -> str:
     """FileStreamSource needs a *directory* of leaf files; stage
-    symlinks to <sf_dir>/<table>.parquet under /tmp (path-keyed,
-    reused across calls). The fixture may be a single FILE (the driver
-    fixtures) or a Spark-written DIRECTORY (the scale-curve corpora) —
-    FileStreamSource does NOT recurse through a symlinked directory
-    (it silently lists zero files, the r11 hollow-curve bug), so
+    symlinks to <sf_dir>/<table>.parquet in a scratch directory keyed
+    by the fixture's content fingerprint (catalog.scratch_cache), so a
+    regenerated fixture (Spark overwrite writes new part filenames)
+    gets a fresh stage instead of dangling symlinks. The fixture may be
+    a single FILE (the driver fixtures) or a Spark-written DIRECTORY
+    (the scale-curve corpora) — FileStreamSource does NOT recurse
+    through a symlinked directory (it silently lists zero files), so
     directory targets fan out to one symlink per part-file."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    d = f"/tmp/k2s_stream_{key}/{table}"
     src = os.path.join(sf_dir, f"{table}.parquet")
-    marker = os.path.join(d, "_STAGED")  # '_' prefix: invisible to Spark listing
-    # Fingerprint the SOURCE (abs path + sorted part list + mtimes),
-    # not just the path: a regenerated fixture (Spark overwrite writes
-    # new part filenames) must invalidate the staged dir, or it keeps
-    # dangling symlinks and misses new parts (r11 advice). Shared with
-    # the artifact caches since r13 (catalog.fixture_fingerprint).
-    from kinesis2sse_spark.catalog import fixture_fingerprint
 
-    parts = (
-        sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
-        if os.path.isdir(src)
-        else None
-    )
-    fp = fixture_fingerprint(sf_dir, table)
-    if os.path.isfile(marker) and open(marker).read() == fp:
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    if parts is not None:
-        for i, f in enumerate(parts):
-            os.symlink(os.path.join(src, f), os.path.join(d, f"part_{i}.parquet"))
-    else:
-        os.symlink(src, os.path.join(d, f"{table}.parquet"))
-    with open(marker, "w") as fh:
-        fh.write(fp)
-    return d
+    def build(d: str) -> None:
+        if os.path.isdir(src):
+            parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+            for i, f in enumerate(parts):
+                os.symlink(os.path.join(src, f), os.path.join(d, f"part_{i}.parquet"))
+        else:
+            os.symlink(src, os.path.join(d, f"{table}.parquet"))
 
-
-def _staged_dir(sf_dir: str) -> str:
-    return _stage_links(sf_dir, "events")
+    return scratch_cache(f"stream_{table}", sf_dir, table, build)
 
 
 def events_stream(
@@ -103,7 +83,7 @@ def events_stream(
     reader = spark.readStream.schema(_events_schema(ts_is_nanos))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(_staged_dir(sf_dir))
+    df = reader.parquet(_stage_links(sf_dir, "events"))
     if ts_is_nanos:
         # integer division, exactly like catalog.py:46 — a double
         # round-trip would lose precision at 1.7e18 ns
@@ -120,10 +100,6 @@ EMBEDDINGS_STREAM_SCHEMA = T.StructType(
 )
 
 
-def _staged_embeddings_dir(sf_dir: str) -> str:
-    return _stage_links(sf_dir, "embeddings")
-
-
 def embeddings_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -138,7 +114,7 @@ def embeddings_stream(
     reader = spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(staged_dir or _staged_embeddings_dir(sf_dir))
+    df = reader.parquet(staged_dir or _stage_links(sf_dir, "embeddings"))
     from kinesis2sse_spark.streaming.dedup import DEDUP_TS_BASE
 
     return df.withColumn(
@@ -191,10 +167,7 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
 def staged_batch_dir(name: str) -> str:
     """Empty staging directory for tests that feed a stream file-by-file
     (deterministic multi-batch arrival with maxFilesPerTrigger=1)."""
-    d = f"/tmp/k2s_stage_{name}"
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
+    return scratch_fresh(f"stage_{name}")
 
 
 def kafka_start_options(start) -> dict[str, str]:

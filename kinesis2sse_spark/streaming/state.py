@@ -23,29 +23,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 OFFSET_STATE_SCHEMA = T.StructType([T.StructField("next_offset", T.LongType())])
 
 
-def _assign_offsets_fn(order_col: str):
-    def assign(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (start,) = state.get if state.exists else (0,)
-        # The group arrives as an ITERATOR of Arrow chunks (default 10k
-        # rows each) — the whole micro-batch must be concatenated before
-        # sorting, or offsets would only be ordered within each chunk.
-        # Materializing the batch is inherent to a total order; the single
-        # state key already serializes this stage (the reference holds the
-        # whole ProcessRecords batch in memory the same way).
-        chunks = [pdf for pdf in pdfs]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            batch = batch.sort_values(order_col).reset_index(drop=True)
-            batch["offset"] = range(start, start + len(batch))
-            start += len(batch)
-            yield batch.drop(columns=["__k"])
-        state.update((start,))
-
-    return assign
-
-
 # NOTE: a transformWithStateInPandas variant was evaluated (Spark 4's
 # typed-state successor to applyInPandasWithState) but remains
 # incompatible with this runtime. Re-probed on pyspark 4.1.2
@@ -62,19 +39,52 @@ def with_streaming_offsets(df: DataFrame, order_col: str = "event_id") -> DataFr
     mutex; throughput of this stage is bounded by one task, so keep the
     payload columns slim and join the rest back by event id if needed.
     """
+    return with_streaming_offsets_per_route(
+        df.withColumn("__k", F.lit(1)), route_col="__k", order_col=order_col
+    ).drop("__k")
+
+
+def with_streaming_offsets_per_route(
+    df: DataFrame, route_col: str = "event_type", order_col: str = "event_id"
+) -> DataFrame:
+    """Contiguous offsets 0,1,2,... PER ROUTE carried across
+    micro-batches — the reference's actual concurrency model (one
+    mutex and one offset counter per SSE route, record_processor.go's
+    per-route serialization) where with_streaming_offsets collapses
+    everything onto one global key. State shards by route across
+    executors, so throughput scales with the route count while each
+    route's offsets stay strictly contiguous; within a micro-batch a
+    route's rows are ordered by ``order_col``. Output schema = input
+    schema + ``offset: long``."""
     out_fields = [T.StructField(f.name, f.dataType) for f in df.schema.fields] + [
         T.StructField("offset", T.LongType())
     ]
-    return (
-        df.withColumn("__k", F.lit(1))
-        .groupBy("__k")
-        .applyInPandasWithState(
-            _assign_offsets_fn(order_col),
-            outputStructType=T.StructType(out_fields),
-            stateStructType=OFFSET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+
+    def assign(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (start,) = state.get if state.exists else (0,)
+        # The group arrives as an ITERATOR of Arrow chunks (default 10k
+        # rows each) — the whole group must be concatenated before
+        # sorting, or offsets would only be ordered within each chunk.
+        # Materializing it is inherent to a total order; the state key
+        # already serializes this stage (the reference holds the whole
+        # ProcessRecords batch in memory the same way).
+        chunks = [pdf for pdf in pdfs]
+        if chunks:
+            batch = pd.concat(chunks, ignore_index=True)
+            batch = batch.sort_values(order_col).reset_index(drop=True)
+            batch["offset"] = range(start, start + len(batch))
+            start += len(batch)
+            yield batch
+        state.update((start,))
+
+    return df.groupBy(route_col).applyInPandasWithState(
+        assign,
+        outputStructType=T.StructType(out_fields),
+        stateStructType=OFFSET_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -540,45 +550,6 @@ def with_session_dedup(
         stateStructType=SESSION_DEDUP_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def with_streaming_offsets_per_route(
-    df: DataFrame, route_col: str = "event_type", order_col: str = "event_id"
-) -> DataFrame:
-    """Contiguous offsets 0,1,2,... PER ROUTE carried across
-    micro-batches — the reference's actual concurrency model (one
-    mutex and one offset counter per SSE route, record_processor.go's
-    per-route serialization) where with_streaming_offsets collapses
-    everything onto one global key. State shards by route across
-    executors, so throughput scales with the route count while each
-    route's offsets stay strictly contiguous; within a micro-batch a
-    route's rows are ordered by ``order_col`` (the whole group must be
-    concatenated before sorting — same reasoning as the global
-    assigner). Output schema = input schema + ``offset: long``."""
-    out_fields = [T.StructField(f.name, f.dataType) for f in df.schema.fields] + [
-        T.StructField("offset", T.LongType())
-    ]
-
-    def assign(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (start,) = state.get if state.exists else (0,)
-        chunks = [pdf for pdf in pdfs]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            batch = batch.sort_values(order_col).reset_index(drop=True)
-            batch["offset"] = range(start, start + len(batch))
-            start += len(batch)
-            yield batch
-        state.update((start,))
-
-    return df.groupBy(route_col).applyInPandasWithState(
-        assign,
-        outputStructType=T.StructType(out_fields),
-        stateStructType=OFFSET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

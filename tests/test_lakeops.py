@@ -4,8 +4,6 @@ partition-layout joins."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from kinesis2sse_spark.catalog import load_table
@@ -30,7 +28,7 @@ def _per_file_bounds(spark, path):
     return [(r.x0, r.x1, r.y0, r.y1) for r in rows]
 
 
-def test_zorder_layout_bounds_both_dimensions(spark):
+def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
     """A z-ordered range-partitioned write clusters BOTH dimensions:
     each file's (x, y) bounding rectangle is small, so a 2-D point or
     box predicate prunes most files via footer stats alone. A 1-D sort
@@ -46,8 +44,7 @@ def test_zorder_layout_bounds_both_dimensions(spark):
     )
     n_files = 16
 
-    zpath = "/tmp/k2s_zorder_layout"
-    shutil.rmtree(zpath, ignore_errors=True)
+    zpath = str(tmp_path / "zorder_layout")
     z = pts.withColumn("zv", zorder_value(F.col("x"), F.col("y")))
     (
         z.repartitionByRange(n_files, "zv")
@@ -57,8 +54,7 @@ def test_zorder_layout_bounds_both_dimensions(spark):
         .parquet(zpath)
     )
 
-    xpath = "/tmp/k2s_xsort_layout"
-    shutil.rmtree(xpath, ignore_errors=True)
+    xpath = str(tmp_path / "xsort_layout")
     (
         pts.repartitionByRange(n_files, "x")
         .sortWithinPartitions("x")
@@ -85,14 +81,13 @@ def test_zorder_layout_bounds_both_dimensions(spark):
     assert z_pruned >= len(z_bounds) // 2, (z_pruned, z_bounds)
 
 
-def test_partition_join_uses_dynamic_partition_pruning(spark):
+def test_partition_join_uses_dynamic_partition_pruning(spark, tmp_path):
     """Plan-lock: joining a date-partitioned fact against a filtered dim
     on the partition column injects a dynamicpruning subquery into the
     fact scan — at 100 TB this is the difference between scanning 7
     partitions and scanning 2,500. (Spark's DPP fires when the filtered
     dim side broadcasts and the join key is a partition column.)"""
-    path = "/tmp/k2s_dpp_fact"
-    shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path / "dpp_fact")
     (
         load_table(spark, SF_CORRECTNESS, "orders")
         .withColumn("month", F.date_format("o_orderdate", "yyyy-MM"))

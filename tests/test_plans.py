@@ -201,24 +201,21 @@ def test_q20_single_fact_scan_semi_joins(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_bucketed_join_has_no_exchange(spark):
+def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Bucketing is the shuffle-elimination lever for repeated fact-fact
     joins at 100 TB: both sides written bucketed by the join key with the
     same bucket count join with ZERO exchanges — the scan itself is the
     co-partitioning. (External-path bucketed tables so nothing lands in
     the repo's cwd warehouse.)"""
-    import shutil
-
     from kinesis2sse_spark.catalog import load_table
 
-    shutil.rmtree("/tmp/k2s_bucketed", ignore_errors=True)
     for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         spark.sql(f"DROP TABLE IF EXISTS {name}_bkt")
         (
             load_table(spark, SF_CORRECTNESS, name)
             .write.bucketBy(8, key)
             .sortBy(key)
-            .option("path", f"/tmp/k2s_bucketed/{name}")
+            .option("path", str(tmp_path / "bucketed" / name))
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(f"{name}_bkt")

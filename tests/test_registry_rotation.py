@@ -1,13 +1,9 @@
-"""Driver-window self-rotation, three rules in priority order:
+"""Driver-window self-rotation, two rules in priority order:
 
 1. RED RE-FRONT — a query whose LATEST driver row is red leads the
    window unconditionally (a regression must never rotate out of
    driver scrutiny while unfixed);
-2. ACTIVE PRIORITY LIST — DRIVER_PRIORITY leads verbatim (exempt from
-   rotate-to-back) until every listed name has a row from round >=
-   DRIVER_PRIORITY_ROUND; rows from EARLIER rounds don't spend it, so
-   re-proof entries with old green rows still front;
-3. behind those: never-checked first (registration order), then checked
+2. behind those: never-checked first (registration order), then checked
    ordered least-recently-checked first (stale rows re-earn fresh
    driver rows once coverage is airtight).
 
@@ -24,6 +20,7 @@ from __future__ import annotations
 from kinesis2sse_spark import registry
 
 GREEN = {"rows_match": True, "schema_match": True, "hash_match": True}
+ROUND = 13  # any recorded round; the rules only compare rounds
 RED = {"rows_match": True, "schema_match": True, "hash_match": False}
 
 
@@ -32,16 +29,13 @@ def _fake_rows(monkeypatch, rows: dict[str, tuple[int, dict]]):
 
 
 def test_red_latest_row_re_fronts_unconditionally(monkeypatch):
-    # every name checked GREEN in the priority round (list spent), but
-    # one non-priority name's LATEST row is red → it leads the window
+    # every name checked GREEN in the same round, but one name late in
+    # registration order has a red LATEST row → it leads the window
     registry._ensure_loaded()
     names = list(registry._REGISTRY)
-    red_name = next(
-        n for n in names if n not in set(registry.DRIVER_PRIORITY)
-    )
-    rnd = registry.DRIVER_PRIORITY_ROUND
-    rows = {n: (rnd, dict(GREEN)) for n in names}
-    rows[red_name] = (rnd, dict(RED))
+    red_name = names[-1]
+    rows = {n: (ROUND, dict(GREEN)) for n in names}
+    rows[red_name] = (ROUND, dict(RED))
     _fake_rows(monkeypatch, rows)
     ordered = list(registry.all_queries())
     assert ordered[0] == red_name
@@ -52,104 +46,28 @@ def test_red_older_than_green_does_not_re_front(monkeypatch):
     # latest round's record counts
     registry._ensure_loaded()
     names = list(registry._REGISTRY)
-    rnd = registry.DRIVER_PRIORITY_ROUND
-    rows = {n: (rnd, dict(GREEN)) for n in names}
+    rows = {n: (ROUND, dict(GREEN)) for n in names}
     _fake_rows(monkeypatch, rows)
     assert registry._red_names() == []
 
 
-def test_priority_entries_lead_despite_old_green_rows(monkeypatch):
-    # THE r06 failure mode: every listed name already has an OLD row,
-    # which under all-names-checked semantics spent the list instantly.
-    # Round-scoped semantics keep it active until the curated round
-    # actually runs.
-    registry._ensure_loaded()
-    pri = [n for n in registry.DRIVER_PRIORITY if n in registry._REGISTRY]
-    assert pri, "DRIVER_PRIORITY should name registered queries"
-    old = registry.DRIVER_PRIORITY_ROUND - 1
-    rows = {n: (old, dict(GREEN)) for n in registry._REGISTRY}
-    _fake_rows(monkeypatch, rows)
-    names = list(registry.all_queries())
-    assert names[: len(pri)] == pri
-
-
-def test_priority_spends_once_curated_round_has_run(monkeypatch):
-    # every listed name has a row from the curated round (or later) →
-    # the list stops fronting and never-checked-first rotation governs
-    registry._ensure_loaded()
-    pri = [n for n in registry.DRIVER_PRIORITY if n in registry._REGISTRY]
-    rnd = registry.DRIVER_PRIORITY_ROUND
-    all_names = list(registry._REGISTRY)
-    never = [n for n in all_names if n not in set(pri)][:3]
-    rows = {
-        n: (rnd, dict(GREEN))
-        for n in all_names
-        if n not in set(never)
-    }
-    _fake_rows(monkeypatch, rows)
-    names = list(registry.all_queries())
-    assert names[: len(never)] == never
-    assert set(names[: len(never)]) & set(pri) == set()
-
-
-def test_red_leads_even_while_priority_list_is_active(monkeypatch):
-    # rule 1 beats rule 2: a red name NOT in the list still fronts the
-    # active list (and a red name IN the list isn't duplicated)
-    registry._ensure_loaded()
-    pri = [n for n in registry.DRIVER_PRIORITY if n in registry._REGISTRY]
-    red_name = next(
-        n for n in registry._REGISTRY if n not in set(pri)
-    )
-    old = registry.DRIVER_PRIORITY_ROUND - 1
-    rows = {n: (old, dict(GREEN)) for n in registry._REGISTRY}
-    rows[red_name] = (old, dict(RED))
-    _fake_rows(monkeypatch, rows)
-    names = list(registry.all_queries())
-    assert names[0] == red_name
-    assert names[1 : 1 + len(pri)] == pri
-    assert len(names) == len(set(names))
-
-
 def test_never_checked_sort_ahead_of_checked_behind_priority(monkeypatch):
+    # no reds: the whole never-checked backlog leads, then the
+    # already-checked remainder — no interleaving
     registry._ensure_loaded()
-    pri = [n for n in registry.DRIVER_PRIORITY if n in registry._REGISTRY]
-    old = registry.DRIVER_PRIORITY_ROUND - 1
     all_names = list(registry._REGISTRY)
-    unchecked = [n for n in all_names if n not in set(pri)][:5]
+    unchecked = all_names[-5:]
     rows = {
-        n: (old, dict(GREEN))
+        n: (ROUND, dict(GREEN))
         for n in all_names
         if n not in set(unchecked)
     }
     _fake_rows(monkeypatch, rows)
     names = list(registry.all_queries())
-    rest = [n for n in names if n not in set(pri)]
-    never = [n for n in rest if n in set(unchecked)]
-    checked = [n for n in rest if n not in set(unchecked)]
-    # behind the manual list: the whole never-checked backlog, then
-    # the already-checked remainder — no interleaving
-    assert rest == never + checked
-
-
-def test_current_window_contains_the_r08_reproof_targets():
-    # the assertions against the REAL repo state round 8 depends on:
-    # sim_topk_ivf and sim_topk_ivfpq must BOTH sit inside the driver's
-    # first-50 window so they re-earn oracle-backed rows (their latest
-    # rows predate the byte-exact oracles they gained in r06) — ivfpq
-    # via DRIVER_PRIORITY, ivf via its r01-vintage LRC position. Also
-    # text_boilerplate_fraction (shuffle key rewritten r08). Vacuous
-    # (list spent, rotation moved on) once all three hold rows from
-    # round >= 8.
-    names = list(registry.all_queries())[:50]
-    rows = registry._driver_rows()
-    for target in (
-        "sim_topk_ivf",
-        "sim_topk_ivfpq",
-        "text_boilerplate_fraction",
-    ):
-        rec = rows.get(target)
-        if rec is None or rec[0] < 8:
-            assert target in names, f"{target} missing from the r08 window"
+    never = [n for n in names if n in set(unchecked)]
+    checked = [n for n in names if n not in set(unchecked)]
+    assert names == never + checked
+    assert never == unchecked
 
 
 def test_every_registered_query_is_windowable():
@@ -157,12 +75,6 @@ def test_every_registered_query_is_windowable():
     names = list(registry.all_queries())
     assert len(names) == len(set(names))
     assert set(names) == set(registry._REGISTRY)
-
-
-def test_priority_names_are_all_registered():
-    registry._ensure_loaded()
-    unknown = [n for n in registry.DRIVER_PRIORITY if n not in registry._REGISTRY]
-    assert unknown == [], f"DRIVER_PRIORITY names not registered: {unknown}"
 
 
 def test_driver_rows_survives_garbage_files(tmp_path, monkeypatch):
@@ -195,22 +107,17 @@ def test_driver_rows_survives_garbage_files(tmp_path, monkeypatch):
 
 
 def test_checked_segment_cycles_least_recently_checked_first(monkeypatch):
-    # airtight coverage (no reds, no never-checked, priority spent):
-    # the window must front the STALEST rows, not the registration
-    # prefix — a query last checked in an old round sorts ahead of one
-    # checked in the latest round, regardless of registration order.
+    # airtight coverage (no reds, no never-checked): the window must
+    # front the STALEST rows, not the registration prefix — a query
+    # last checked in an old round sorts ahead of one checked in the
+    # latest round, regardless of registration order.
     registry._ensure_loaded()
     names = list(registry._REGISTRY)
-    rnd = registry.DRIVER_PRIORITY_ROUND
-    rows = {n: (rnd, dict(GREEN)) for n in names}
-    # registered LAST, checked LONGEST ago — but never priority
-    # members: handing one of those an old row would legitimately
-    # re-activate the priority list (round-scoped spend rule) and
-    # this test is about the LRC segment, not priority fronting
-    pri = set(registry.DRIVER_PRIORITY)
-    stale = [n for n in names if n not in pri][-3:]
+    rows = {n: (ROUND, dict(GREEN)) for n in names}
+    # registered LAST, checked LONGEST ago
+    stale = names[-3:]
     for n in stale:
-        rows[n] = (rnd - 3, dict(GREEN))
+        rows[n] = (ROUND - 3, dict(GREEN))
     _fake_rows(monkeypatch, rows)
     ordered = list(registry.all_queries())
     assert ordered[:3] == stale

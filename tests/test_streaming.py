@@ -273,19 +273,15 @@ def test_stream_stream_join_matches_across_batches(spark):
     assert rows == [(1, 9.5)], rows
 
 
-def test_streaming_parquet_file_sink(spark):
+def test_streaming_parquet_file_sink(spark, tmp_path):
     """Exactly-once file sink: writeStream → parquet with checkpoint; the
     committed output matches the input across restarts of the same query
     (the durable C1 path the reference deliberately lacks)."""
-    import shutil
-
     d = staged_batch_dir("fsink_in")
     schema = "event_id long, v string"
     _write_batch(spark, d, "b0", [(1, "a"), (2, "b"), (3, "c")], schema)
-    out_dir = "/tmp/k2s_fsink_out"
-    ckpt = "/tmp/k2s_fsink_ckpt"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out_dir = str(tmp_path / "fsink_out")
+    ckpt = str(tmp_path / "fsink_ckpt")
     s = _read_stream(spark, d, schema)
     q = (
         s.writeStream.format("parquet")

@@ -6,8 +6,10 @@ sf0.1 row counts and measures the heavy operators at each size. A
 near-linear time-vs-rows curve is the evidence that no operator bends
 quadratic once the corpus outgrows fixed overheads.
 
-Synthesis (derived from the READ-ONLY sf0.1 fixtures, written under
-/tmp — TESTDATA.md forbids touching /root/testdata):
+Synthesis (derived from the READ-ONLY sf0.1 fixtures, written to a
+scratch cache under the system temp directory, keyed by the source
+documents' content fingerprint — TESTDATA.md forbids writing into the
+fixture tree):
 - documents x M: replica r in [0, M) re-salts every 4th token with an
   r-specific prefix. Consequences, by construction:
   * every SPAN_LEN=8-token window and every 3-token shingle crosses a
@@ -37,11 +39,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from kinesis2sse_spark.catalog import scratch_cache
 from kinesis2sse_spark.registry import all_queries
 from kinesis2sse_spark.session import build_session
 
 SRC = "/root/testdata/sf0.1"
-BASE = "/tmp/scale_curve"
 QUERIES = (
     "dedup_exact",
     "dedup_ngram_jaccard",
@@ -66,7 +68,7 @@ QUERIES = (
 
 
 def generate(spark, mult: int) -> str:
-    out = os.path.join(BASE, f"x{mult}")
+    out = os.path.join(scratch_cache("scale_curve", SRC, "documents"), f"x{mult}")
     if os.path.exists(os.path.join(out, "_DONE")):
         generate_events(spark, mult, out)  # r13 addition, own marker
         return out
