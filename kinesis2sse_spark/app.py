@@ -26,8 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis2sse_spark.pipeline.envelope import deaggregate_envelopes, parse_envelope
-from kinesis2sse_spark.pipeline.since import parse_go_duration, parse_rfc3339
-from kinesis2sse_spark.streaming.serve import DEFAULT_CAPACITY, RouteOptions, SseService
+from kinesis2sse_spark.pipeline.since import parse_since
+from kinesis2sse_spark.streaming.serve import (
+    DEFAULT_CAPACITY,
+    RouteOptions,
+    SseService,
+    route_names,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -67,11 +72,7 @@ def resolve_start(start: str | None, now: datetime | None = None):
         return "latest"
     if start.upper() == "TRIM_HORIZON":
         return "trim_horizon"
-    ts = parse_rfc3339(start)  # strict shape, like Go's time.Parse
-    if ts is not None:
-        return ts
-    d = parse_go_duration(start)  # raises ValueError on junk, like HTTP 400
-    return (now or datetime.now(timezone.utc)) - d
+    return parse_since(start, now)  # ?since= rules: ValueError on junk
 
 
 class ServiceApp:
@@ -98,10 +99,10 @@ class ServiceApp:
                 raise ValueError(f"kafka source needs kafka://servers/topic, got {r.source_dir!r}")
             # Kinesis seek → Kafka: TRIM_HORIZON ≡ earliest, LATEST ≡
             # latest, timestamp → native broker-side startingTimestamp
-            # (kafka_start_options). The event-time filter below still
+            # (kafka_start_options). The event-time cutoff below still
             # applies to timestamp starts: the broker seeks on
             # log-append time, which can trail the envelope's event
-            # time, so the filter trims the overlap — it can only trim,
+            # time, so the cutoff trims the overlap — it can only trim,
             # never recover, which is why the seek itself must not skip.
             stream = kafka_stream(self.spark, servers, topic, start=start)
         elif r.source_dir.startswith("kinesis://"):
@@ -131,16 +132,6 @@ class ServiceApp:
                 .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
                 .parquet(r.source_dir)
             )
-        # KPL-aggregated records (JSON array of envelopes) de-aggregate
-        # before the parse, exactly where the reference's KCL does it
-        # (record_processor.go:104-106); scalar records pass through.
-        # observe metrics replace the reference's per-record drop warnings
-        # (record_processor.go:63-81): each micro-batch's progress carries
-        # n_records/n_dropped under "ingest_<route>" with zero extra scans
-        parsed = parse_envelope(
-            deaggregate_envelopes(stream),
-            observe=f"ingest_{r.pattern.strip('/') or 'root'}",
-        )
         if start == "latest":
             # LATEST over a file directory that may already hold data:
             # approximate the Kinesis seek with an event-time cutoff at
@@ -152,15 +143,25 @@ class ServiceApp:
                 if r.source_dir.startswith(("kafka://", "kinesis://"))
                 else datetime.now(timezone.utc)
             )
-        if isinstance(start, datetime):
+        # trim_horizon: full replay of the directory — no cutoff.
+        cutoff = start if isinstance(start, datetime) else None
+        if cutoff is not None and cutoff.tzinfo is not None:
             # a naive datetime is already UTC by convention — only convert
             # when an explicit offset was given (astimezone on a naive
             # value would reinterpret it as host-local time)
-            if start.tzinfo is not None:
-                start = start.astimezone(timezone.utc).replace(tzinfo=None)
-            parsed = parsed.filter(F.col("time") >= F.lit(start))
-        # trim_horizon: full replay of the directory — no filter.
-        return parsed
+            cutoff = cutoff.astimezone(timezone.utc).replace(tzinfo=None)
+        # KPL-aggregated records (JSON array of envelopes) de-aggregate
+        # before the parse, exactly where the reference's KCL does it
+        # (record_processor.go:104-106); scalar records pass through.
+        # observe metrics replace the reference's per-record drop warnings
+        # (record_processor.go:63-81): each micro-batch's progress carries
+        # n_records/n_dropped (and n_before_start for a cutoff) under
+        # "ingest_<route>" with zero extra scans
+        return parse_envelope(
+            deaggregate_envelopes(stream),
+            observe=f"ingest_{route_names(r.pattern)[1]}",
+            start=cutoff,
+        )
 
     def start(self) -> None:
         """Start every route's query, rolling back on first failure
@@ -176,12 +177,11 @@ class ServiceApp:
         started = []
         try:
             for r in self.routes:
-                name = r.pattern.strip("/") or "root"
                 q = self.service.attach_query(
                     r.pattern,
                     self._route_stream(r),
                     checkpoint_location=(
-                        os.path.join(self.checkpoint_dir, name)
+                        os.path.join(self.checkpoint_dir, route_names(r.pattern)[1])
                         if self.checkpoint_dir
                         else None
                     ),

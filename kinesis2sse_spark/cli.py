@@ -8,9 +8,9 @@ Parity map (kinesis2sse.go:160-174, flag for flag):
 - ``--app-name-prefix`` (default kinesis2sse) ................. :169
 - ``--debug`` ................................................. :174
 - ``--shard-sync-interval-millis`` / ``--failover-time-millis``
-  are accepted for CLI parity but are KCL lease-coordination knobs
-  with no Spark analog (Structured Streaming owns shard assignment);
-  they are logged and otherwise ignored ....................... :170-171
+  are KCL lease-coordination knobs with no Spark analog (Structured
+  Streaming owns shard assignment); they are accepted for CLI parity
+  and ignored ................................................. :170-171
 
 Generalizations beyond the reference (documented, not silent):
 - a route's ``stream`` may be a plain Kinesis stream name (combined

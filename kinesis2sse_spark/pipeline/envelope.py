@@ -121,7 +121,7 @@ def reject_reason(raw) -> "F.Column":
 
 
 def parse_envelope(
-    df: DataFrame, value_col: str = "value", observe=None
+    df: DataFrame, value_col: str = "value", observe=None, start=None
 ) -> DataFrame:
     """S4 + F1-F3 + P1 + P2: parse raw event-envelope bytes/text, drop
     malformed records, and keep only event time + canonical detail.
@@ -139,6 +139,11 @@ def parse_envelope(
     (batch: read ``obs.get`` after an action) or a metric-name string
     (streaming: read ``progress.observedMetrics[name]``). Zero extra
     passes either way.
+
+    ``start``: a route's start cutoff (naive UTC datetime). Valid
+    envelopes older than it are dropped by the same generator and, with
+    ``observe``, counted as ``n_before_start``, so every parsed envelope
+    is kept, malformed or before the start.
     """
     # Fidelity notes vs the reference (record_processor.go:78-88):
     # - {"detail": null} is KEPT and stored as the JSON text "null"
@@ -150,22 +155,31 @@ def parse_envelope(
     #   strings, bools, nulls and key order are byte-identical. Use
     #   canonical_json() (pandas UDF) where Python-exact bytes matter.
     _, _, time_col, detail_col = _envelope_columns(F.col(value_col))
+    src = df
     if observe is not None:
         # CollectMetrics is a pushdown barrier, so the drop below reads
         # the projected attributes instead of re-deriving them.
-        parsed = df.select(time_col.alias("time"), detail_col.alias("detail")).observe(
-            observe,
+        src = df.select(time_col.alias("time"), detail_col.alias("detail"))
+        time_col, detail_col = F.col("time"), F.col("detail")
+    keep = time_col.isNotNull() & detail_col.isNotNull()
+    if start is not None:
+        after_start = time_col >= F.lit(start)
+        before_start = keep & ~after_start
+        keep = keep & after_start
+    if observe is not None:
+        counts = [
             F.count(F.lit(1)).alias("n_records"),
             F.coalesce(
-                F.sum((F.col("time").isNull() | F.col("detail").isNull()).cast("long")),
+                F.sum((time_col.isNull() | detail_col.isNull()).cast("long")),
                 F.lit(0),
             ).alias("n_dropped"),
-        )
-        time_col, detail_col = F.col("time"), F.col("detail")
-        src = parsed
-    else:
-        src = df
-    # The drop is a GENERATOR, not a Filter: explode(valid ? [row] : []).
+        ]
+        if start is not None:
+            counts.append(
+                F.coalesce(F.sum(before_start.cast("long")), F.lit(0)).alias("n_before_start")
+            )
+        src = src.observe(observe, *counts)
+    # The drop is a GENERATOR, not a Filter: explode(keep ? [row] : []).
     # A Filter over this projection gets split/inlined by the optimizer
     # and pushed beneath any repartition — the variant parse then runs
     # 2-3x per row INSIDE the (often single-partition) scan. The
@@ -174,11 +188,7 @@ def parse_envelope(
     # and the difference grows with input skew.
     row = F.struct(time_col.alias("time"), detail_col.alias("detail"))
     return src.select(
-        F.explode(
-            F.when(time_col.isNotNull() & detail_col.isNotNull(), F.array(row)).otherwise(
-                F.array()
-            )
-        ).alias("__r")
+        F.explode(F.when(keep, F.array(row)).otherwise(F.array())).alias("__r")
     ).select("__r.time", "__r.detail")
 
 

@@ -103,51 +103,14 @@ LSH_PLANES = 6  # bits per table → 64 buckets/table
 LSH_TABLES = 8  # OR-construction: candidate = same bucket in ANY table
 
 
-def _lsh_signature(vcol, table: int, n_planes: int):
-    """Sign pattern of projections onto ``n_planes`` pseudo-random
-    hyperplanes (components in [-1,1) derived from xxhash64(table,
-    plane, dim) — no RNG, same plan every run), packed into an int.
-
-    REFERENCE implementation (interpreted JVM higher-order functions):
-    kept as the semantic definition of the bucket ids and as the
-    equivalence yardstick for the vectorized ``_lsh_sign`` stage below
-    (test_lsh_arrow_signatures_match_hof). The query path uses
-    ``_lsh_sign`` — per corpus vector this form evaluates
-    tables × planes × dim interpreted xxhash64 calls (~3k per row),
-    which was the registry's last big row-at-a-time hot path
-    (6.1 s at sf0.1; guide §4.2)."""
-    bits = []
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vcol,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(vcol) - 1),
-                    lambda d: (
-                        F.pmod(F.xxhash64(F.lit(table), F.lit(p), d), F.lit(2000))
-                        - 1000
-                    ).cast("double")
-                    / 1000.0,
-                ),
-                lambda x, h: x * h,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(2**p)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 # --- Vectorized LSH signatures (guide §4.2) ---------------------------
 #
 # The hyperplane components depend ONLY on the constants (table, plane,
 # dim) — xxhash64(t, p, d) over int32 literals with Spark's fixed seed
 # 42 — so the whole tables × planes × dim hyperplane tensor is a
 # compile-time constant. Evaluating it per ROW through interpreted HOFs
-# (the reference form above) costs ~3k interpreted hash calls per
+# (the reference form ``_lsh_signature`` in tests/test_round14_ops.py,
+# which defines the bucket ids) costs ~3k interpreted hash calls per
 # vector; folding it into ~3k-literal array expressions defeats codegen
 # (A/B-measured 10x SLOWER in r13). The fast form: reimplement Spark's
 # xxhash64 for the int32-literal case in Python (public spec,
@@ -228,8 +191,8 @@ def _lsh_plane_matrix(n_tables: int, n_planes: int, dim: int):
 def _lsh_sign(df):
     """mapInArrow signature stage: (vec_id, v, norm) → (vec_id, v, norm,
     sigs) where sigs[t] is table t's bucket id — byte-identical to
-    explode-of-_lsh_signature (see the exactness note above; pinned by
-    test_lsh_arrow_signatures_match_hof). Only the columns the kernel
+    the reference _lsh_signature (see the exactness note above; pinned
+    by test_lsh_arrow_signatures_match_hof). Only the columns the kernel
     needs cross the boundary (§4.1), v/norm pass through untouched so
     the exact rerank downstream scores the same doubles."""
     n_tables, n_planes = LSH_TABLES, LSH_PLANES

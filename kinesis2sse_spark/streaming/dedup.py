@@ -379,85 +379,11 @@ def minhash_perms() -> list[tuple[int, int]]:
 _MH_PERMS = minhash_perms()
 
 
-def _minhash_bands_reference(df: DataFrame) -> DataFrame:
-    """REFERENCE JVM signature pipeline: (doc_id, text, ts) →
-    (doc_id, ts, ts_s, band, bkey, sig) with one row per band. Shingle →
-    rolling char hash → per-permutation min → ROWS-per-band signature
-    string. Interpreted HOFs (~1.3 s/batch at sf0.1) — the query path
-    uses the vectorized with_minhash_bands below; this form stays as
-    the semantic definition and the equivalence-test yardstick
-    (test_minhash_arrow_bands_match_reference)."""
-    w = F.split("text", " ")
-    sh = MINHASH_SHINGLE
-    # hash each TOKEN's characters once, then combine 3 token hashes
-    # per shingle — vs char-rolling whole shingle strings this hashes
-    # every character once instead of sh times and skips the shingle
-    # string allocation entirely (measured 33 s -> see PERF.md at the
-    # 10x curve point; the oracle mirrors the same two-level hash)
-    tok_hash = lambda s: F.aggregate(  # noqa: E731
-        F.transform(F.split(s, ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(7).cast("long"),
-        lambda h, c: (h * 31 + c) % MINHASH_P,
-    )
-    df = df.withColumn("th", F.transform(w, tok_hash))
-    th = F.col("th")
-
-    def shingle(i):
-        h = F.element_at(th, i)
-        for j in range(1, sh):
-            h = (h * 8191 + F.element_at(th, i + j)) % MINHASH_P
-        return h
-
-    hashes = F.when(
-        F.size(th) >= sh,
-        F.transform(F.sequence(F.lit(1), F.size(th) - (sh - 1)), shingle),
-    ).otherwise(F.array().cast("array<long>"))
-    df = df.withColumn("hs", hashes)
-    def _perm(a: int, b: int):
-        # factory, not default-arg lambda: pyspark counts the lambda's
-        # parameters to pick the HOF arity, so extra defaults break it
-        return lambda x: (x * a + b) % MINHASH_P
-
-    sigs = [F.array_min(F.transform(F.col("hs"), _perm(a, b))) for a, b in _MH_PERMS]
-    bands = []
-    for bnd in range(MINHASH_BANDS):
-        raw = sigs[bnd * MINHASH_ROWS : (bnd + 1) * MINHASH_ROWS]
-        parts = [s.cast("string") for s in raw]
-        # bounded STATE key: hashing the signature into MINHASH_BKEYS
-        # buckets caps the pandas-group count at BANDS x MINHASH_BKEYS
-        # regardless of corpus size (an unbucketed (band, sig) key
-        # means one pandas invocation per distinct signature —
-        # per-group overhead made the 10x curve superlinear; measured
-        # 161 s -> see PERF.md). r14: 4096 -> 64 buckets — at sf0.1 the
-        # live (band, bkey) group count, not state mass, dominated the
-        # micro-batch (the same per-key framing overhead the embedding
-        # probe's coarse keys attack); 64 keeps each group's member
-        # scan short while cutting keys ~20x. The MATCH rule is still
-        # exact sig equality, checked inside the probe — bucketing
-        # changes the physical grouping only, never a verdict.
-        bkey = raw[0]
-        for s in raw[1:]:
-            bkey = (bkey * 8191 + s) % MINHASH_P
-        bands.append(
-            F.struct(
-                F.lit(bnd).alias("band"),
-                (bkey % MINHASH_BKEYS).alias("bkey"),
-                F.concat_ws("-", *parts).alias("sig"),
-            )
-        )
-    return df.withColumn("bs", F.explode(F.array(*bands))).select(
-        "doc_id",
-        "ts",
-        F.unix_timestamp("ts").alias("ts_s"),
-        F.col("bs.band").alias("band"),
-        F.col("bs.bkey").alias("bkey"),
-        F.col("bs.sig").alias("sig"),
-    )
-
-
 def with_minhash_bands(df: DataFrame) -> DataFrame:
     """Vectorized signature pipeline (r14, guide §4.2): same columns
-    and VALUES as _minhash_bands_reference, computed in a mapInArrow
+    and VALUES as the interpreted-HOF reference pipeline
+    (``_minhash_bands_reference`` in tests/test_round14_ops.py, the
+    semantic definition of the bands), computed in a mapInArrow
     kernel. Everything is exact integer arithmetic mod P, so NumPy
     int64 reproduces the JVM folds bit-for-bit (all intermediates
     < 2^63: char fold ≤ 31·P + 0x10FFFF, shingle/bkey folds ≤ 8191·P + P,

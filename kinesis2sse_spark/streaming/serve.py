@@ -180,6 +180,15 @@ class RouteLog:
             return self._tail_from(offset)
 
 
+def route_names(pattern: str) -> tuple[str, str]:
+    """A route pattern's two derived names: the URL path its log is
+    served at (trailing slashes dropped, "/" for the root) and the name
+    its streaming query ``route_<name>``, parse observation
+    ``ingest_<name>`` and checkpoint subdirectory use ("root" for "/")."""
+    path = pattern.rstrip("/") or "/"
+    return path, path.strip("/") or "root"
+
+
 @dataclass
 class RouteOptions:
     pattern: str
@@ -203,10 +212,10 @@ class SseService:
 
     def __post_init__(self) -> None:
         for r in self.routes:
-            self._logs[r.pattern.rstrip("/") or "/"] = RouteLog(r.capacity, r.max_age)
+            self._logs[route_names(r.pattern)[0]] = RouteLog(r.capacity, r.max_age)
 
     def log(self, pattern: str) -> RouteLog:
-        return self._logs[pattern.rstrip("/") or "/"]
+        return self._logs[route_names(pattern)[0]]
 
     # -- Spark integration ------------------------------------------------
     def attach_query(self, pattern: str, stream_df, checkpoint_location: str | None = None):
@@ -251,7 +260,7 @@ class SseService:
                 log.append(row["time"], row["detail"])
 
         writer = stream_df.writeStream.foreachBatch(push).queryName(
-            f"route_{pattern.strip('/') or 'root'}"
+            f"route_{route_names(pattern)[1]}"
         )
         if checkpoint_location:
             writer = writer.option("checkpointLocation", checkpoint_location)
@@ -277,7 +286,7 @@ class SseService:
 
             def do_GET(self) -> None:  # noqa: N802 (http.server API)
                 url = urlparse(self.path)
-                path = url.path.rstrip("/") or "/"
+                path = route_names(url.path)[0]
                 if path == "/health":  # E3
                     self.send_response(200)
                     self.send_header("Content-Length", "0")

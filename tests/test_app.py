@@ -461,6 +461,48 @@ def test_metrics_endpoint_reconciles_malformed_envelopes(spark):
         app.stop()
 
 
+def test_metrics_endpoint_reconciles_start_cutoff(spark):
+    """A route with a start cutoff (LATEST over a file directory, or a
+    timestamp) counts the valid envelopes older than the cutoff as
+    n_before_start, so every parsed envelope is served, malformed or
+    before the start: next_offset + n_dropped + n_before_start ==
+    n_records."""
+    src = staged_batch_dir("app_metrics_cutoff")
+    envelopes = [
+        json.dumps({"time": f"2024-01-01T00:00:0{i}Z", "detail": {"i": i}}) for i in range(3)
+    ]
+    envelopes += [
+        "not json",
+        json.dumps({"time": "2024-06-01T00:00:00Z", "detail": {"i": 3}}),
+    ]
+    spark.createDataFrame([(v,) for v in envelopes], "value string").coalesce(
+        1
+    ).write.parquet(os.path.join(src, "b0"))
+    app = ServiceApp(
+        spark,
+        routes=[
+            RouteConfig("/latest", os.path.join(src, "*")),
+            RouteConfig("/since", os.path.join(src, "*"), start="2024-03-01T00:00:00Z"),
+        ],
+    )
+    app.start()
+    try:
+        app.process_all_available()
+        got = _metrics(
+            app,
+            lambda m: all(m.get(f"route_{r}", {}).get("n_records", 0) >= 5
+                          for r in ("latest", "since")),
+        )
+        for route, served in (("latest", 0), ("since", 1)):
+            counts = got[f"route_{route}"]
+            assert counts["n_records"] == 5, got
+            assert counts["n_dropped"] == 1, got
+            assert counts["n_before_start"] == 4 - served, got
+            assert app.service.log(f"/{route}").next_offset() == served
+    finally:
+        app.stop()
+
+
 def test_metrics_endpoint_surfaces_watermark_drops(spark, tmp_path):
     """Late-data observability (r11 verdict item 6): the reference
     STORES disorder (README.md:39-40) while Spark DROPS rows older than

@@ -69,11 +69,12 @@ def _edges(spark, d):
     return path, rows
 
 
-def test_graph_edges_rebuild_in_place_invalidates(spark):
+def test_graph_edges_rebuild_in_place_invalidates(spark, tmp_path, monkeypatch):
     """Regenerating documents.parquet at the SAME path must produce a
     fresh edge artifact reflecting the new content (no _SUCCESS-trust
     staleness)."""
-    d = tempfile.mkdtemp()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    d = str(tmp_path / "sf")
     _write_docs(spark, d, [_T_A, _T_A, _T_B])  # dup pair (1,2)
     p1, e1 = _edges(spark, d)
     assert (1, 2) in e1 and not any(3 in pair for pair in e1)
@@ -84,10 +85,11 @@ def test_graph_edges_rebuild_in_place_invalidates(spark):
     assert (2, 3) in e2 and (1, 2) not in e2
 
 
-def test_graph_edges_basename_collision(spark):
+def test_graph_edges_basename_collision(spark, tmp_path, monkeypatch):
     """Two fixture trees whose dirs share a basename must get distinct
     artifacts (the old basename-keyed path collided)."""
-    ra, rb = tempfile.mkdtemp(), tempfile.mkdtemp()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    ra, rb = str(tmp_path / "a"), str(tmp_path / "b")
     da, db = os.path.join(ra, "sfx"), os.path.join(rb, "sfx")
     os.makedirs(da)
     os.makedirs(db)
@@ -99,7 +101,7 @@ def test_graph_edges_basename_collision(spark):
     assert (1, 2) in ea and (2, 3) in eb
 
 
-def test_ivf_index_rebuild_in_place_invalidates(spark):
+def test_ivf_index_rebuild_in_place_invalidates(spark, tmp_path, monkeypatch):
     """Same staleness class for the IVF artifact family: an in-place
     embeddings rewrite must invalidate the prebuilt index (cell
     assignment recomputed from the new vectors)."""
@@ -108,7 +110,8 @@ def test_ivf_index_rebuild_in_place_invalidates(spark):
         _ensure_ivf_index,
     )
 
-    d = tempfile.mkdtemp()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    d = str(tmp_path / "sf")
     n, dim = IVF_K + 8, 8
 
     def basis(i, scale):

@@ -128,7 +128,7 @@ def test_recall_vs_probes_monotone(spark):
     assert rows[-1]["n_hits"] <= rows[-1]["n_possible"]
 
 
-def test_vad_hand_fixture(spark):
+def test_vad_hand_fixture(spark, tmp_path, monkeypatch):
     """VAD segmentation on a hand-built waveform: two active runs
     separated by a silent window; energies verified by hand."""
     from kinesis2sse_spark.queries.multimodal import (
@@ -151,7 +151,8 @@ def test_vad_hand_fixture(spark):
             }
         )
     )
-    d = tempfile.mkdtemp()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    d = str(tmp_path / "sf")
     df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(d, "documents.parquet")
     )
@@ -1227,16 +1228,16 @@ def test_round13_batch7_smoke_sf0001(spark, name):
     assert df.count() >= 0
 
 
-def test_global_stat_folds_emit_on_empty(spark):
+def test_global_stat_folds_emit_on_empty(spark, tmp_path, monkeypatch):
     """Kruskal-Wallis / Friedman / Platt must emit their single
     summary row on EMPTY input exactly like their oracles' ungrouped
     aggregates do (the keyed-groupBy-over-empty divergence class
     caught by the round-13 empty audit)."""
-    import tempfile as _tf
-
     import pyarrow.parquet as _pq
 
-    d = _tf.mkdtemp(prefix="k2s_empty_stats_")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    d = str(tmp_path / "k2s_empty_stats")
+    os.makedirs(d)
     for t in ("events", "embeddings"):
         tbl = _pq.read_table(f"/root/testdata/sf0.001/{t}.parquet").slice(0, 0)
         _pq.write_table(tbl, os.path.join(d, f"{t}.parquet"))

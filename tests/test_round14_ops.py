@@ -5,9 +5,18 @@ declared query's output)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis2sse_spark.registry import all_queries
+from kinesis2sse_spark.streaming.dedup import (
+    _MH_PERMS,
+    MINHASH_BANDS,
+    MINHASH_BKEYS,
+    MINHASH_P,
+    MINHASH_ROWS,
+    MINHASH_SHINGLE,
+)
 
 SF = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -38,6 +47,44 @@ def test_lsh_python_xxhash64_matches_spark(spark):
         assert _xxhash64_ints(tpl) == row[f"h{i}"], tpl
 
 
+def _lsh_signature(vcol, table: int, n_planes: int):
+    """Sign pattern of projections onto ``n_planes`` pseudo-random
+    hyperplanes (components in [-1,1) derived from xxhash64(table,
+    plane, dim) — no RNG, same plan every run), packed into an int.
+
+    REFERENCE implementation (interpreted JVM higher-order functions):
+    kept as the semantic definition of the bucket ids and as the
+    equivalence yardstick for the vectorized ``_lsh_sign`` stage
+    (test_lsh_arrow_signatures_match_hof). The query path uses
+    ``_lsh_sign`` — per corpus vector this form evaluates
+    tables × planes × dim interpreted xxhash64 calls (~3k per row),
+    which was the registry's last big row-at-a-time hot path
+    (6.1 s at sf0.1; guide §4.2)."""
+    bits = []
+    for p in range(n_planes):
+        proj = F.aggregate(
+            F.zip_with(
+                vcol,
+                F.transform(
+                    F.sequence(F.lit(0), F.size(vcol) - 1),
+                    lambda d: (
+                        F.pmod(F.xxhash64(F.lit(table), F.lit(p), d), F.lit(2000))
+                        - 1000
+                    ).cast("double")
+                    / 1000.0,
+                ),
+                lambda x, h: x * h,
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        bits.append(F.when(proj >= 0, F.lit(2**p)).otherwise(F.lit(0)))
+    out = bits[0]
+    for b in bits[1:]:
+        out = out + b
+    return out
+
+
 def test_lsh_arrow_signatures_match_hof(spark):
     """The mapInArrow signature stage must produce byte-identical bucket
     ids to the reference JVM-HOF _lsh_signature for every corpus vector
@@ -49,7 +96,6 @@ def test_lsh_arrow_signatures_match_hof(spark):
         LSH_PLANES,
         LSH_TABLES,
         _lsh_sign,
-        _lsh_signature,
         _with_norm,
     )
 
@@ -148,6 +194,82 @@ def test_dedup_probe_exact_bucket_match_inside_coarse_group():
     assert got2[5] is pd.NA   # bucket-5 members are 880-900s old
 
 
+def _minhash_bands_reference(df: DataFrame) -> DataFrame:
+    """REFERENCE JVM signature pipeline: (doc_id, text, ts) →
+    (doc_id, ts, ts_s, band, bkey, sig) with one row per band. Shingle →
+    rolling char hash → per-permutation min → ROWS-per-band signature
+    string. Interpreted HOFs (~1.3 s/batch at sf0.1) — the query path
+    uses the vectorized with_minhash_bands; this form stays as
+    the semantic definition and the equivalence-test yardstick
+    (test_minhash_arrow_bands_match_reference)."""
+    w = F.split("text", " ")
+    sh = MINHASH_SHINGLE
+    # hash each TOKEN's characters once, then combine 3 token hashes
+    # per shingle — vs char-rolling whole shingle strings this hashes
+    # every character once instead of sh times and skips the shingle
+    # string allocation entirely (measured 33 s -> see PERF.md at the
+    # 10x curve point; the oracle mirrors the same two-level hash)
+    tok_hash = lambda s: F.aggregate(  # noqa: E731
+        F.transform(F.split(s, ""), lambda c: F.ascii(c).cast("long")),
+        F.lit(7).cast("long"),
+        lambda h, c: (h * 31 + c) % MINHASH_P,
+    )
+    df = df.withColumn("th", F.transform(w, tok_hash))
+    th = F.col("th")
+
+    def shingle(i):
+        h = F.element_at(th, i)
+        for j in range(1, sh):
+            h = (h * 8191 + F.element_at(th, i + j)) % MINHASH_P
+        return h
+
+    hashes = F.when(
+        F.size(th) >= sh,
+        F.transform(F.sequence(F.lit(1), F.size(th) - (sh - 1)), shingle),
+    ).otherwise(F.array().cast("array<long>"))
+    df = df.withColumn("hs", hashes)
+    def _perm(a: int, b: int):
+        # factory, not default-arg lambda: pyspark counts the lambda's
+        # parameters to pick the HOF arity, so extra defaults break it
+        return lambda x: (x * a + b) % MINHASH_P
+
+    sigs = [F.array_min(F.transform(F.col("hs"), _perm(a, b))) for a, b in _MH_PERMS]
+    bands = []
+    for bnd in range(MINHASH_BANDS):
+        raw = sigs[bnd * MINHASH_ROWS : (bnd + 1) * MINHASH_ROWS]
+        parts = [s.cast("string") for s in raw]
+        # bounded STATE key: hashing the signature into MINHASH_BKEYS
+        # buckets caps the pandas-group count at BANDS x MINHASH_BKEYS
+        # regardless of corpus size (an unbucketed (band, sig) key
+        # means one pandas invocation per distinct signature —
+        # per-group overhead made the 10x curve superlinear; measured
+        # 161 s -> see PERF.md). r14: 4096 -> 64 buckets — at sf0.1 the
+        # live (band, bkey) group count, not state mass, dominated the
+        # micro-batch (the same per-key framing overhead the embedding
+        # probe's coarse keys attack); 64 keeps each group's member
+        # scan short while cutting keys ~20x. The MATCH rule is still
+        # exact sig equality, checked inside the probe — bucketing
+        # changes the physical grouping only, never a verdict.
+        bkey = raw[0]
+        for s in raw[1:]:
+            bkey = (bkey * 8191 + s) % MINHASH_P
+        bands.append(
+            F.struct(
+                F.lit(bnd).alias("band"),
+                (bkey % MINHASH_BKEYS).alias("bkey"),
+                F.concat_ws("-", *parts).alias("sig"),
+            )
+        )
+    return df.withColumn("bs", F.explode(F.array(*bands))).select(
+        "doc_id",
+        "ts",
+        F.unix_timestamp("ts").alias("ts_s"),
+        F.col("bs.band").alias("band"),
+        F.col("bs.bkey").alias("bkey"),
+        F.col("bs.sig").alias("sig"),
+    )
+
+
 def test_minhash_arrow_bands_match_reference(spark):
     """The vectorized minhash banding kernel must be row-identical to
     the retained JVM reference pipeline — including the pinned edge
@@ -157,7 +279,6 @@ def test_minhash_arrow_bands_match_reference(spark):
     from kinesis2sse_spark.catalog import load_table
     from kinesis2sse_spark.streaming.dedup import (
         DEDUP_TS_BASE,
-        _minhash_bands_reference,
         with_minhash_bands,
     )
 

@@ -297,6 +297,33 @@ def test_recorder_totals_by_query_without_spark():
     }
 
 
+def test_recorder_totals_cover_every_batch_ever_heard():
+    """/metrics totals are running sums, not sums over a bounded window
+    of recent batches: after 10,050 batches of one route every batch,
+    row and observed count is still in them, so a long-running route
+    keeps reconciling with its next_offset."""
+    from types import SimpleNamespace as NS
+
+    from pyspark.sql import Row
+
+    from kinesis2sse_spark.streaming.metrics import ProgressRecorder
+
+    rec = ProgressRecorder()
+    n = 10_050
+    for batch_id in range(n):
+        rec.onQueryProgress(NS(progress=NS(
+            name="route_r", batchId=batch_id, numInputRows=10, inputRowsPerSecond=None,
+            processedRowsPerSecond=None, durationMs={}, stateOperators=[],
+            observedMetrics={"ingest_r": Row(n_records=10, n_dropped=1)},
+        )))
+    assert rec.totals_by_query() == {
+        "route_r": {
+            "batches": n, "rows": 10 * n, "dropped_by_watermark": 0,
+            "n_records": 10 * n, "n_dropped": n,
+        },
+    }
+
+
 def test_stop_logs_query_failure_and_stops_the_rest(caplog):
     """A query whose stop() raises is reported with its name and error,
     and the remaining queries and the HTTP server still stop."""

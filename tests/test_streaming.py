@@ -814,7 +814,7 @@ def test_progress_recorder_audits_rows_end_to_end(spark, tmp_path):
         "".join(_json.dumps({"ts": 1000 * i, "data": f"r{i}"}) + "\n" for i in range(7))
     )
     fake_kinesis.register(spark)
-    rec = ProgressRecorder(capacity=100)
+    rec = ProgressRecorder()
     spark.streams.addListener(rec)
     out = str(tmp_path / "m_out")
     try:
@@ -841,16 +841,21 @@ def test_progress_recorder_audits_rows_end_to_end(spark, tmp_path):
         # listener events are delivered asynchronously; drain briefly
         import time
 
+        def rows_in():
+            return rec.totals_by_query().get("metrics_probe", {}).get("rows", 0)
+
         sunk = spark.read.parquet(out).count()
         for _ in range(50):
-            if rec.total_input_rows("metrics_probe") >= sunk:
+            if rows_in() >= sunk:
                 break
             time.sleep(0.2)
-        assert rec.total_input_rows("metrics_probe") == sunk == 7
-        df = rec.progress_df(spark)
-        batches = df.where(F.col("query_name") == "metrics_probe").collect()
+        assert rows_in() == sunk == 7
+        # the per-batch view is Spark's own progress buffer
+        batches = q.recentProgress
         assert len(batches) >= 1
-        assert all(b.trigger_ms >= 0 and b.batch_id >= 0 for b in batches)
+        assert all(
+            b["durationMs"]["triggerExecution"] >= 0 and b["batchId"] >= 0 for b in batches
+        )
     finally:
         spark.streams.removeListener(rec)
 
@@ -901,14 +906,12 @@ def test_available_now_backfill_processes_in_bounded_batches(spark, tmp_path):
         assert q.awaitTermination(120), "availableNow query did not self-terminate"
         assert spark.read.parquet(out).count() == 30
         for _ in range(50):
-            if rec.total_input_rows("an_backfill") >= 30:
+            if rec.totals_by_query().get("an_backfill", {}).get("rows", 0) >= 30:
                 break
             time.sleep(0.2)
-        batches = [
-            b for b in rec._rows if b.query_name == "an_backfill" and b.num_input_rows > 0
-        ]
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         assert len(batches) >= 3, batches
-        assert all(b.num_input_rows == 10 for b in batches), batches
+        assert all(b["numInputRows"] == 10 for b in batches), batches
     finally:
         spark.streams.removeListener(rec)
 
